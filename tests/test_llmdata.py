@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import hashlib
+import logging
 
 import pytest
 from pyspark.sql import functions as F
@@ -3619,6 +3620,26 @@ def test_unigram_encode_counts(spark):
         assert 0 <= out[i]["n_multi_tokens"] <= out[i]["n_tokens"]
 
 
+def test_unigram_max_piece_len_out_of_range_raises(spark):
+    """The Viterbi state packs piece lengths in base 5, so a piece
+    longer than 4 would alias silently; both public entry points
+    refuse such a max_piece_len before running anything."""
+    from transcriptomics_data_integration_spark.llmdata.bpe import (
+        unigram_encode,
+        unigram_train_fixed,
+    )
+
+    df = _docs(spark, [(0, "the cat sat")])
+    pieces = spark.createDataFrame(
+        [("t", 1, 1, 0)], "piece string, piece_len int, count long, cost_micro long"
+    )
+    for bad in (0, 5):
+        with pytest.raises(ValueError, match="max_piece_len"):
+            unigram_train_fixed(df, max_piece_len=bad)
+        with pytest.raises(ValueError, match="max_piece_len"):
+            unigram_encode(df, pieces, max_piece_len=bad)
+
+
 def test_flac_frame_roundtrip_all_subframes():
     """encode_flac_frames -> decode_flac_frames is the identity on
     amplitude moments for every subframe type, across random int16
@@ -4126,31 +4147,6 @@ def test_video_phash_wide_neardup(spark):
     assert not any(3 in k for k in pairs)
 
 
-
-def test_connected_components_steps_per_cycle_invariant(spark):
-    """r11: composing multiple propagation steps per lineage/convergence
-    cycle is a latency lever only — the min-label fixpoint (and hence
-    every closure consumer's output) is identical for any
-    steps_per_cycle."""
-    from transcriptomics_data_integration_spark.llmdata.dedup import (
-        connected_components,
-    )
-
-    chain = [(i, i + 1) for i in range(100, 111)]
-    tri = [(1, 2), (2, 3), (1, 3)]
-    edges = spark.createDataFrame(chain + tri + [(50, 51)], ["id_a", "id_b"])
-    base = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, steps_per_cycle=1).collect()
-    }
-    for steps in (2, 3):
-        alt = {
-            r["node"]: r["component"]
-            for r in connected_components(edges, steps_per_cycle=steps).collect()
-        }
-        assert alt == base
-
-
 def test_incremental_dedup_band_index_and_no_broadcast_match(spark):
     """r11 levers: a pre-exploded band index (build_minhash_band_index)
     and the broadcast_batch=False huge-batch arm both produce verdicts
@@ -4200,7 +4196,7 @@ def test_incremental_dedup_band_index_and_no_broadcast_match(spark):
     assert no_bcast == direct
 
 
-def test_incremental_dedup_auto_arm_selection(spark, tmp_path):
+def test_incremental_dedup_auto_arm_selection(spark, tmp_path, caplog):
     """r12: broadcast_batch=None self-selects the arm from Catalyst's
     plan-size estimate.  A small PARQUET-backed batch (the gate shape —
     file-size statistics exist) picks the broadcast arm; an RDD-backed
@@ -4247,7 +4243,14 @@ def test_incremental_dedup_auto_arm_selection(spark, tmp_path):
         dd.INCREMENTAL_BROADCAST_AUTO_MAX_BYTES = old
     assert auto_shuffle == auto_bcast
     # an unestimable plan falls back to the huge sentinel (shuffle arm)
-    assert dd._plan_size_bytes(None) == 1 << 62
+    # and says so once, naming the exception
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=dd.__name__):
+        assert dd._plan_size_bytes(None) == 1 << 62
+    warned = [r for r in caplog.records if r.name == dd.__name__]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "AttributeError" in warned[0].getMessage()
+    assert "forced to shuffle" in warned[0].getMessage()
 
 
 def test_minhash_index_bucketed_roundtrip(spark, tmp_path):

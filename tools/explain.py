@@ -1,52 +1,67 @@
-"""Dump the physical plan (and a shape summary) for any suite query.
+"""Plan shape of suite queries: a one-line summary each, or full dumps.
 
 Usage:
-    python tools/explain.py <query> [sf_dir] [--full]
+    python tools/explain.py <sf_dir> [query ...] [--full] [--out DIR]
 
-Shape summary counts the operators that matter for the PLANS.md scale
-claims: exchanges, broadcast vs sort-merge vs nested-loop joins,
-scans, whole-stage-codegen spans, pushed filters / pruned schemas.
+With no query list, covers every ``bench.BENCH_QUERIES`` entry.  Plans
+are built, not executed.  The summary comes from
+``plans.inspect.plan_report`` (exchanges, join strategies, pushed
+filters); ``--full`` also prints ``.explain("formatted")``, and
+``--out DIR`` writes it to ``DIR/<query>.txt`` instead.
 """
 
 from __future__ import annotations
 
-import re
+import argparse
+import os
 import sys
 
 sys.path.insert(0, ".")
 
-from transcriptomics_data_integration_spark.session import get_spark
-from transcriptomics_data_integration_spark.suite import QUERIES
+from transcriptomics_data_integration_spark.plans.inspect import (  # noqa: E402
+    explain_formatted,
+    plan_report,
+)
+from transcriptomics_data_integration_spark.session import get_spark  # noqa: E402
+from transcriptomics_data_integration_spark.suite import QUERIES  # noqa: E402
 
 
 def main() -> None:
-    name = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 and not sys.argv[2].startswith("--") else "/root/testdata/sf0.001"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--full", action="store_true")
+    ap.add_argument("--out")
+    args = ap.parse_args()
+    names = args.queries
+    if not names:
+        from bench import BENCH_QUERIES
+
+        names = list(BENCH_QUERIES)
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
     spark = get_spark("explain")
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    counts = {
-        "Exchange": plan.count("Exchange") - plan.count("ReusedExchange"),
-        "ReusedExchange": plan.count("ReusedExchange"),
-        "BroadcastHashJoin": plan.count("BroadcastHashJoin"),
-        "SortMergeJoin": plan.count("SortMergeJoin"),
-        "BroadcastNestedLoopJoin": plan.count("BroadcastNestedLoopJoin"),
-        "HashAggregate": plan.count("HashAggregate"),
-        "Window": plan.count("Window"),
-        "Scan parquet": plan.count("Scan parquet"),
-        "WholeStageCodegen": len(set(re.findall(r"\*\((\d+)\)", plan))),
-        "TakeOrderedAndProject": plan.count("TakeOrderedAndProject"),
-    }
-    print(f"== {name} @ {sf_dir}")
-    for k, v in counts.items():
-        if v:
-            print(f"  {k}: {v}")
-    for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", plan):
-        if m.group(1):
-            print(f"  PushedFilters: [{m.group(1)}]")
-            break
-    if "--full" in sys.argv:
-        print(plan)
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in names:
+        try:
+            df = QUERIES[name](spark, args.sf_dir)
+            rep = plan_report(df)
+            text = explain_formatted(df) if args.out or args.full else ""
+        except Exception as exc:  # noqa: BLE001 - record, keep going
+            print(f"{name}: ERROR {exc}", flush=True)
+            continue
+        print(
+            f"{name}: exchanges={rep.n_exchanges} bhj={rep.n_broadcast_joins} "
+            f"smj={rep.n_sortmerge_joins} bnlj={rep.n_nested_loop_joins} "
+            f"pushed_filters={len(rep.pushed_filters)} "
+            f"take_ordered={rep.has_take_ordered}",
+            flush=True,
+        )
+        if args.out:
+            with open(os.path.join(args.out, f"{name}.txt"), "w") as f:
+                f.write(f"== {name} @ {args.sf_dir}\n{text}\n")
+        elif args.full:
+            print(text)
 
 
 if __name__ == "__main__":

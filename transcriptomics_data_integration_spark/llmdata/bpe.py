@@ -293,6 +293,10 @@ def _unigram_dp_sql(max_piece_len: int) -> str:
     absent-piece lookup is let-bound via ``transform(array(...))`` so
     it is evaluated once per candidate (the repo-standard binding
     against re-evaluation)."""
+    if not 1 <= max_piece_len <= 4:
+        # base-5 lens pack: a piece length of 5+ aliases silently
+        # (lens [1, 5] packs identically to [2, 0])
+        raise ValueError(f"max_piece_len must be in 1..4, got {max_piece_len}")
 
     def cand(l: int) -> str:
         prev = f"element_at(acc, i - {l - 1})"

@@ -22,13 +22,16 @@ Scale notes (the reason each variant exists):
 
 from __future__ import annotations
 
-import os
+import logging
 import re
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.runtime import register_persisted
+
+_log = logging.getLogger(__name__)
 
 SHINGLE_LEN = 5
 N_HASHES = 16
@@ -71,7 +74,7 @@ def _md5_60bit(col: Column) -> Column:
 # variance J(1-J)/n; 30-bit min values add only ~n/2^30 spurious
 # equality per seed) is what the 16-md5 recipe gave — unlike
 # ARITHMETIC seed mixing: a Kirsch–Mitzenmacher A/B
-# (h_j = (h1 + j*h2) mod 2^60, tools/r9_seedmix_probe.py) made h_j
+# (h_j = (h1 + j*h2) mod 2^60, probe in commit 616a941) made h_j
 # AFFINE in j, so the 4 rows of a band were order-correlated (a
 # shingle winning the min at seed j keeps winning at j+1..j+3), band
 # match probability collapsed from J^4 toward J, and the incremental
@@ -909,13 +912,16 @@ def connected_components_stars(
     )
 
 
+# propagation steps per lineage/convergence cycle of connected_components
+_CC_STEPS_PER_CYCLE = 2
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
     stats: dict | None = None,
-    steps_per_cycle: int = 2,
 ) -> DataFrame:
     """Connected components over an undirected edge list -> one row per
     node ``(node, component)`` with ``component`` = the minimum node id
@@ -962,13 +968,13 @@ def connected_components(
         # r11: the dominant cost at moderate graph sizes is the FIXED
         # per-cycle overhead (checkpoint job + convergence collect +
         # scheduling barriers), not the shuffled bytes — so compose
-        # ``steps_per_cycle`` propagation steps into one lineage/
+        # _CC_STEPS_PER_CYCLE propagation steps into one lineage/
         # convergence cycle (same monotone min-label fixpoint, same
         # output; A/B at sf0.1: 2 steps/cycle cut the closure ~25%,
         # see PLANS.md r11).  Worst case it runs one redundant step
         # after convergence — a tiny-label-table no-op.
         stepped = labels
-        for _s in range(steps_per_cycle):
+        for _s in range(_CC_STEPS_PER_CYCLE):
             rounds += 1
             # (1) neighbor min: candidate labels flowing along edges
             nbr = (
@@ -990,8 +996,8 @@ def connected_components(
         # an Observation side-channel (CollectMetrics node) instead of
         # a dedicated collect job — ONE driver-barrier job per cycle,
         # down from two; delivery through localCheckpoint(eager=True)'s
-        # materializing action is proven by tools/r12_observe_probe.py
-        # (52 ms, value == direct aggregate) and pinned by
+        # materializing action is proven by the probe added in commit
+        # 52ca7c2 (52 ms, value == direct aggregate) and pinned by
         # test_connected_components_* staying green.  The checkpoint
         # stays EAGER — the r6 negative (lazy checkpoint with the
         # aggregate as materializer: 4.9 -> 5.2-6.2 s) fused two
@@ -1502,21 +1508,24 @@ def read_minhash_index(spark, table_prefix: str) -> tuple[DataFrame, DataFrame]:
 # arm; larger (or unestimable) batches take the bucketed/shuffle arm.
 # Estimated TEXT bytes, not broadcast bytes — the broadcasts carry
 # ~8-byte keys per doc, so 256 MB of estimated batch corresponds to a
-# few MB on the wire.  Env-tunable for cluster profiles where bigger
-# driver/executor memories justify a higher bound.
-INCREMENTAL_BROADCAST_AUTO_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_INC_BCAST_MAX_BYTES", str(256 * 1024 * 1024))
-)
+# few MB on the wire.
+INCREMENTAL_BROADCAST_AUTO_MAX_BYTES = 256 * 1024 * 1024
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's optimized-plan size estimate in bytes — plan-build
-    only, runs no job.  Unknown/unavailable estimates return a huge
-    sentinel so the caller's auto-selection falls back to the arm that
-    is safe at any size (the shuffle arm)."""
+    only, runs no job.  Unavailable estimates return a huge sentinel
+    so the caller's auto-selection falls back to the arm that is safe
+    at any size (the shuffle arm), and log a WARNING saying so."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    except (Py4JError, AttributeError, TypeError, ValueError) as exc:
+        _log.warning(
+            "plan-size estimate failed (%s: %s); incremental dedup arm "
+            "forced to shuffle",
+            type(exc).__name__,
+            exc,
+        )
         return 1 << 62
 
 

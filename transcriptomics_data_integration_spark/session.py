@@ -34,19 +34,12 @@ def get_spark(app_name: str = "transcriptomics-spark", shuffle_partitions: int |
         # GC-triggered cleanup bursts into multi-second stalls charged
         # to whatever query is running (observed 8s -> 30s outliers)
         .config("spark.cleaner.referenceTracking.blocking", "false")
-        # io codec decision (r11, VERDICT item 9): lz4 stays the
-        # session default — a same-host A/B on the closure-heavy
-        # dedup_clusters gate measured zstd 29% SLOWER end-to-end
-        # (9.4 -> 12.1 s; banded pairs 1.25 -> 3.15 s) because
-        # iterative CC rounds ship many tiny shuffle blocks where
-        # zstd's per-block cost dominates.  zstd's ~35% smaller spill
-        # (PLANS.md r10) still wins on disk-tight SCALE PROBES (the
-        # 5M index build ENOSPCs under lz4) — probe tools set
-        # SPARK_GRAFT_IO_CODEC=zstd per session for exactly that.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        # io codec decision (r11, VERDICT item 9): lz4 — a same-host
+        # A/B on the closure-heavy dedup_clusters gate measured zstd
+        # 29% SLOWER end-to-end (9.4 -> 12.1 s; banded pairs 1.25 ->
+        # 3.15 s) because iterative CC rounds ship many tiny shuffle
+        # blocks where zstd's per-block cost dominates.
+        .config("spark.io.compression.codec", "lz4")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1884,42 +1884,10 @@ ORACLES["jsonl_parse"] = ORACLE_JSONL_PARSE
 # Driver-window ordering
 # ---------------------------------------------------------------------------
 # The correctness driver gates the FIRST 50 entries of ``QUERIES`` in
-# iteration order.  Round 1 proved the first 50 green (47 pass + 2
-# oracle-typing artifacts, both cast-fixed above); the remaining ~43
-# declared queries never got a hard-signal row.  Rotate them to the
-# front so round 2 gates the SURVEY section-2 core (expression_pipeline,
-# moderated/weighted DE, voom, ComBat, ICC, permutation FDR, ...) plus
-# every other not-yet-gated query.  Oracled queries come before
-# rows-only ones; previously-green queries trail (pytest still covers
-# them every round).
-_ROUND2_FRONT = [
-    # -- sect. 2 core, oracled, untested in r01 --------------------------
-    "expression_pipeline", "moderated_de", "weighted_de", "pairwise_contrasts",
-    "lmfit_design", "moderated_lmfit", "voom_trend", "batch_center",
-    "icc_meta", "permutation_fdr", "dup_correlation", "array_weights",
-    "term_enrichment", "fisher_enrichment", "cqn_bias", "dataset_group_means",
-    "strata_correlation", "ks_strata", "mahalanobis_outliers", "impute_missing",
-    "impute_em",
-    "qc_sample_metrics", "registry_upsert", "melt_measures", "pivot_matrix",
-    "full_outer_merge", "rollup_summary", "skyline",
-    # -- S5/S6 source contracts, gated this round ------------------------
-    "htseq_scan", "rsem_convert",
-    # -- llm-data / events, oracled, untested in r01 ---------------------
-    "rolling_stats", "quality_filter", "mixture_sample", "funnel",
-    "cohort_retention", "normalize_dedup",
-    # -- r01 hash-artifact rows, oracle casts fixed this round -----------
-    "reliability_filter", "set_compare",
-    # -- never had a driver row; round-2 additions prioritized ----------
-    # oracled: median_polish_fixed, pii_scrub, sample_distances,
-    # logistic_irls2, (impute_em above).  rows-only: the rest.
-    "median_polish", "median_polish_fixed", "pii_scrub", "combat_full",
-    "combat_nonparam", "pca_samples", "sample_distances", "logistic_irls2",
-    # -- round-2 full-fidelity kernels (rows-only: not SQL-expressible) --
-    # rotating to the r03 window to stay at exactly 50: ivf_ann, pq_ann,
-    # hclust_samples, kmeans_samples, mds_samples, quantile_sketch
-    # (ward_hclust + sample_distances supersede the hclust/mds slots)
-    "voom_lowess", "cqn_spline", "ward_hclust", "rnaseq_pipeline",
-]
+# iteration order.  ``_ROUND11_FRONT`` leads that order (its first 50
+# names are the window); every other query follows in registry order.
+# The window is pinned by ``test_oracle_window_order``: editing this
+# list moves the oracle window.
 
 
 def _reorder_front(registry: dict, front: list[str]) -> dict:
@@ -1949,307 +1917,6 @@ def _with_persist_drain(fn: QueryFn) -> QueryFn:
     return wrapped
 
 
-# Round-3 window: (a) the 7 queries that have NEVER produced a driver
-# row (rows-only by nature — the rotation debt VERDICT r2 item 1 holds
-# us to), (b) the round-3 additions (hash-gated compositions A/B/C +
-# meta, PCA-space M17, the distributed phases of M11/M12
-# [pca_covariance, mds_bmatrix, kmeans_lloyd2], the deterministic ANN
-# twins [ivf_fixed, pq_fixed], fixed-schedule EB ComBat [combat_eb2]
-# the unigram-LM quality score [doc_logprob] and the MOSS winnowing
-# overlap [winnow_overlap]), plus the three
-# adaptive-window queries whose physical plan changed this round
-# (skyline, ks_strata + pack_sequences below) and moderated_de for the
-# ttest seam refactor, (c) the three r2 hash-reds with
-# their oracles cast/sign-fixed this round, (d) the rows-only kernels
-# whose code changed this round (ward.D, voom residual SD) plus the
-# r2 rows-only set for a second stamp, and (e) 30 r1-gated oracled
-# queries for cumulative reconfirmation under the strict gate —
-# including the three perf-flagged bucketed rewrites.  With this
-# window every one of the 107 declared queries has a driver row
-# across r1-r3.
-_ROUND3_FRONT = [
-    # -- (a) never gated ------------------------------------------------
-    "ivf_ann", "pq_ann", "hclust_samples", "kmeans_samples", "mds_samples",
-    "quantile_sketch", "logistic_de",
-    # -- (b) round-3 additions ------------------------------------------
-    "rnaseq_pipeline_binned", "closed_pipeline", "normalized_de",
-    "meta_pipeline", "pca_outliers", "pca_covariance", "mds_bmatrix",
-    "kmeans_lloyd2", "ivf_fixed", "pq_fixed", "combat_eb2", "doc_logprob", "jsonl_parse", "bpe_merges", "edit_pairs", "url_canonical", "line_dedup",
-    "winnow_overlap", "dedup_keep_best",
-    # -- (c) r2 hash-reds, oracles fixed --------------------------------
-    "icc_meta", "dup_correlation", "quality_filter",
-    # -- (d) changed kernels + r2 rows-only re-stamp --------------------
-    "ward_hclust", "voom_lowess", "rnaseq_pipeline", "cqn_spline",
-    "median_polish", "combat_full", "combat_nonparam", "pca_samples",
-    # -- (e) cumulative reconfirmation (r1-only oracled) -----------------
-    "skyline", "ks_strata", "moderated_de",
-    "merge_left_join", "interval_join",
-    "quantile_thresholds", "sample_correlation", "quantile_normalization",
-    "diff_expression", "bh_histogram", "stouffer_meta", "fem_rem",
-    "pack_sequences",
-]
-
-# Round-4 window: (a) the five queries that have NEVER produced a
-# driver row (r4 additions media_header_decode / voom_loess2 /
-# cqn_irls2 + late-r3 winnow_containment / domain_dup_rate), (b) every
-# query whose kernel or oracle changed in r4 — the exact-fitFDist
-# eBayes chain (moderated_de, moderated_lmfit, weighted_de,
-# rnaseq_pipeline_binned, closed_pipeline, normalized_de,
-# diff_expression + bh_histogram for the optimized-plan window
-# routing, with skyline/ks_strata/pack_sequences re-stamping the other
-# adaptive-window users), the overflow-safe Knuth hash (ivf_fixed,
-# pq_fixed), the real-header multimodal semantics
-# (multimodal_featurize), the covariance-route M17 (pca_outliers,
-# rows-only), and the jsonl/keep_best ADVICE fixes (jsonl_parse,
-# dedup_keep_best), (c) the r3-touched kernels the r3 plan deferred
-# (permutation_fdr, sample_distances, cosine_topk, lsh_ann,
-# batch_center, expression_pipeline, minhash_lsh, p_improvement), and
-# (d) a 20-slice of the r1-only-gated remainder (llm-data + sources
-# families per plan).
-_ROUND4_FRONT = [
-    # -- (a) never gated -------------------------------------------------
-    "media_header_decode", "winnow_containment", "domain_dup_rate",
-    "voom_loess2", "cqn_irls2", "paragraph_dedup", "ngram_span_mask",
-    "cel_decode",
-    # -- (b) r4-changed kernels/oracles ----------------------------------
-    "moderated_de", "moderated_lmfit", "weighted_de",
-    "rnaseq_pipeline_binned", "closed_pipeline", "normalized_de",
-    "diff_expression", "bh_histogram", "skyline", "ks_strata",
-    "pack_sequences", "ivf_fixed", "pq_fixed", "multimodal_featurize",
-    "pca_outliers", "jsonl_parse", "dedup_keep_best",
-    # -- (c) r3-touched, deferred from the r3 window ---------------------
-    "permutation_fdr", "sample_distances", "cosine_topk", "lsh_ann",
-    "batch_center", "expression_pipeline", "minhash_lsh", "p_improvement",
-    # -- (d) r1-only-gated slice (llm-data + sources families) -----------
-    "token_stats", "text_quality", "language_id", "doc_fingerprint",
-    "dedup_exact", "ngram_jaccard", "simhash", "cosine_neardup",
-    "event_window_counts", "sessionize", "json_extract",
-    "duplicate_chunks", "simhash_neardup", "asof_join", "dedup_clusters",
-    "vocab_topk", "embedding_quantize",
-]
-
-# Round-5 window, executing the r4 plan verbatim: (a) the 16-query
-# r1-only remainder — the last queries without a strict-gate-era
-# driver row; after this window every declared query has one, (b)
-# every query whose kernel changed in r5 — the plan-build-time
-# fitFDist prior (moderated_de, moderated_lmfit, weighted_de,
-# diff_expression, closed_pipeline, normalized_de,
-# rnaseq_pipeline_binned), the unrolled pq_fixed ADC sum, the
-# vectorized CEL decode (cel_decode, expression_pipeline), the
-# vectorized media checksum (media_header_decode,
-# multimodal_featurize), the regex-safe paragraph separator
-# (paragraph_dedup), and the pre-collect gene bound in the
-# covariance-route M17 (pca_outliers, rows-only), and (c) a 20-slice
-# of the longest-unstamped remainder (r2-only-stamped queries,
-# registry order).
-_ROUND5_FRONT = [
-    # -- (a) never driver-gated (r1-only rows) ---------------------------
-    "pricing_summary", "gene_stats", "library_size", "gene_exclusion",
-    "outlier_removal", "zero_variance_filter", "nonspecific_filter",
-    "value_conditioning", "argmax_dedup", "dedup_rows", "frequency_table",
-    "venn_membership", "doc_sample", "contamination", "language_id_ngram",
-    "vocab_size_sketch",
-    # -- (b) r5-changed/new kernels --------------------------------------
-    "moderated_de", "moderated_lmfit", "weighted_de", "diff_expression",
-    "closed_pipeline", "normalized_de", "rnaseq_pipeline_binned",
-    "pq_fixed", "cel_decode", "expression_pipeline", "media_header_decode",
-    "multimodal_featurize", "paragraph_dedup", "pca_outliers",
-    "voom_loess3", "gopher_repetition", "semdedup", "idat_decode",
-    "quality_model", "minhash_accuracy", "corpus_pipeline",
-    # -- (c) longest-unstamped slice (r2-only driver rows) ---------------
-    "reliability_filter", "set_compare", "rolling_stats", "mixture_sample",
-    "funnel", "cohort_retention", "normalize_dedup", "pii_scrub",
-    "mahalanobis_outliers", "strata_correlation", "term_enrichment",
-    "fisher_enrichment", "pairwise_contrasts",
-]
-
-# Round-6 window, executing the r5 verdict item 1 exactly: (a) the 17
-# remaining r2-only-stamped queries (pure evidence debt — all pass the
-# judge's 3-SF strict gate, they just lack a recent driver row), (b)
-# every query whose kernel changed or was added in r6 — the corpus
-# tokenizer fix (corpus_pipeline), the _dlit non-finite literal guard
-# in the fitFDist prior (the 7-query DE chain), the _semdedup_flag
-# refactor (semdedup), the NEW semdedup_2level and detection_p gates,
-# the dedup_clusters re-stamp after the drift adjudication, the
-# expression_pipeline optional-F12 param, and the idat.py extension
-# (idat_decode) — and (c) a 12-slice of the r3-only-stamped remainder
-# in registry order.  Exactly 50 = the driver's gated window.
-_ROUND6_FRONT = [
-    # -- (a) r2-only-stamped (longest evidence debt) ----------------------
-    "lmfit_design", "impute_missing", "impute_em", "median_polish_fixed",
-    "logistic_irls2", "voom_trend", "cqn_bias", "array_weights",
-    "qc_sample_metrics", "dataset_group_means", "rollup_summary",
-    "pivot_matrix", "melt_measures", "registry_upsert", "full_outer_merge",
-    "htseq_scan", "rsem_convert",
-    # -- (b) r6-changed/new kernels ---------------------------------------
-    "corpus_pipeline", "diff_expression", "moderated_de", "moderated_lmfit",
-    "weighted_de", "closed_pipeline", "normalized_de",
-    "rnaseq_pipeline_binned", "semdedup", "semdedup_2level", "detection_p",
-    "png_pixels", "wav_decode", "gopher_quality", "bpe_encode",
-    "token_budget_sample", "ann_recall", "leakage_split",
-    "dedup_clusters", "expression_pipeline", "idat_decode",
-    # -- (c) r3-only-stamped slice (registry order; rnaseq_pipeline /
-    # ivf_ann / ward_hclust / cqn_spline — all declared rows-only —
-    # bumped to the r7 front to keep the window's oracled coverage at
-    # the new-gate additions)
-    "merge_left_join", "interval_join", "quantile_thresholds",
-    "sample_correlation", "quantile_normalization", "stouffer_meta",
-    "fem_rem", "icc_meta", "dup_correlation", "quality_filter",
-    "median_polish", "combat_full",
-]
-
-# Round-7 window, executing the r6 verdict item 3 exactly: (a) the 24
-# r3-only-stamped queries bumped from the r6 window (pure evidence
-# debt — all pass the judge's 3-SF strict gate), (b) every r7-touched
-# kernel — token_budget_sample FIRST (the one r6 red row; oracle
-# HUGEINT cast fix, engine untouched), the NEW jpeg_pixels gate,
-# wav_decode (odd-length data-chunk guard), dedup_clusters (the
-# stars-fallback non-converged dedup fix lives in the same module),
-# and icc_meta (DIMSUM tier added beside the exact kernel) — and (c) a
-# 12-slice of the r4-only-stamped remainder in registry order.
-# Exactly 50 = the driver's gated window.
-_ROUND7_FRONT = [
-    # -- (b-head) the r6 red row, cleared first ---------------------------
-    "token_budget_sample",
-    # -- (a) r3-only-stamped carry-overs (24) -----------------------------
-    "rnaseq_pipeline", "ivf_ann", "ward_hclust", "cqn_spline",
-    "voom_lowess", "pca_samples", "combat_nonparam", "pq_ann",
-    "hclust_samples", "kmeans_samples", "mds_samples", "quantile_sketch",
-    "logistic_de", "meta_pipeline", "pca_covariance", "mds_bmatrix",
-    "kmeans_lloyd2", "combat_eb2", "doc_logprob", "bpe_merges",
-    "edit_pairs", "url_canonical", "line_dedup", "winnow_overlap",
-    # -- (b) r7-touched kernels -------------------------------------------
-    "jpeg_pixels", "gif_pixels", "wav_decode", "dedup_clusters",
-    "icc_meta", "icc_dimsum", "icc_sampled", "temperature_sample",
-    "mp4_header", "html_extract", "bloom_contamination",
-    "asof_directions", "web_pipeline",
-    # -- (c) r4-only-stamped slice (registry order) -----------------------
-    "bh_histogram", "p_improvement", "token_stats", "text_quality",
-    "language_id", "doc_fingerprint", "dedup_exact", "ngram_jaccard",
-    "minhash_lsh", "simhash", "cosine_topk", "lsh_ann",
-]
-
-# Round-8 window, executing the r7 verdict item 2 exactly: (a) the
-# seven r7 gates added AFTER the r7 window froze (never
-# driver-stamped; compression_ratio is the window's one declared
-# rows-only member — DEFLATE is not SQL-expressible), (b) the 23
-# r4-only-stamped queries bumped from the r7 window, (c) every
-# r8-touched kernel — the three NEW gates (dabg_filter, qc_rle,
-# video_frames), temperature_sample (largest-remainder allocation),
-# web_pipeline (allocation change flows through its oracle),
-# mp4_header (spec-valid mvhd), and the simhash star-compression
-# closure consumers (dedup_clusters, leakage_split, corpus_pipeline;
-# dedup_keep_best already in (b), robots_filter already in (a)) —
-# and (d) a 10-slice of the r5-only-stamped remainder in registry
-# order.  Exactly 50 = the driver's gated window.
-_ROUND8_FRONT = [
-    # -- (a) never-stamped r7 gates ----------------------------------------
-    "global_shuffle", "variant_extract", "unicode_clean",
-    "compression_ratio", "flac_header", "robots_filter", "bigram_logprob",
-    # -- (b) r4-only-stamped carry-overs (23) ------------------------------
-    "cosine_neardup", "event_window_counts", "sessionize", "json_extract",
-    "duplicate_chunks", "simhash_neardup", "asof_join", "vocab_topk",
-    "embedding_quantize", "pack_sequences", "batch_center",
-    "permutation_fdr", "ks_strata", "skyline", "sample_distances",
-    "ivf_fixed", "jsonl_parse", "dedup_keep_best", "winnow_containment",
-    "domain_dup_rate", "voom_loess2", "cqn_irls2", "ngram_span_mask",
-    # -- (c) r8-touched kernels ---------------------------------------------
-    "dabg_filter", "qc_rle", "rna_degradation", "video_frames",
-    "temperature_sample", "web_pipeline", "mp4_header", "dedup_clusters",
-    "leakage_split", "corpus_pipeline",
-    # -- (d) r5-only-stamped slice (registry order) -------------------------
-    "pricing_summary", "gene_stats", "library_size", "gene_exclusion",
-    "outlier_removal", "zero_variance_filter", "nonspecific_filter",
-    "reliability_filter", "value_conditioning", "argmax_dedup",
-]
-
-# Round-9 window, executing the r8 verdict item 1 exactly: (a) the 21
-# second-wave r8 gates never driver-stamped (judge-verified at 3 SFs
-# in r8), (b) every r9-touched/new kernel — the two re-keyed minhash
-# gates (two-lane md5 seed family; incremental_dedup already in (a)),
-# the new unigram-LM tokenizer pair, and rle_deflate (the oracled
-# DEFLATE-subset twin replacing the permanently-no_oracle
-# compression_ratio row, which left the driver window), plus the new
-# flac_decode gate (frame/Rice decode closing the r8 header-only FLAC
-# boundary) and the image_dhash / audio_neardup perceptual near-dup
-# gates (the modality-dedup triple) — and (c)
-# the r5-only-stamped remainder in registry order up to the 50-query
-# window (cohort_retention, dedup_rows, doc_sample, funnel,
-# voom_loess3, vocab_size_sketch, venn_membership, term_enrichment
-# slip to r10 along with the rest of the r5/r6-only backlog).  (Compare r9
-# bench rows against the r8 driver column THROUGH the host band
-# recorded in BASELINE.md "r8 driver column".)
-_ROUND9_FRONT = [
-    # -- (a) never-stamped second-wave r8 gates (21) -----------------------
-    "bm25_topk", "pagerank3", "perplexity_buckets", "substring_spans",
-    "repetition_schedule", "warc_extract", "ingest_pipeline",
-    "tfidf_keywords", "kneser_ney", "c4_filter", "doc_chunks",
-    "dsir_select", "zipf_fit", "incremental_dedup", "prototype_prune",
-    "gsea_es", "c4_span_dedup", "pack_bins", "url_blocklist",
-    "curation_pipeline", "domain_prior",
-    # -- (b) r9-touched / new kernels --------------------------------------
-    "minhash_lsh", "minhash_accuracy",
-    "unigram_train", "unigram_encode", "wordpiece_merges", "rle_deflate",
-    "flac_decode", "image_dhash", "audio_neardup",
-    # -- (c) r5-only-stamped slice (registry order, 20 of 28) --------------
-    "cel_decode", "contamination", "fisher_enrichment", "frequency_table",
-    "gopher_repetition", "language_id_ngram", "mahalanobis_outliers",
-    "media_header_decode", "mixture_sample", "multimodal_featurize",
-    "normalize_dedup", "pairwise_contrasts", "paragraph_dedup",
-    "pca_outliers", "pii_scrub", "pq_fixed", "quality_model",
-    "rolling_stats", "set_compare", "strata_correlation",
-]
-
-# Round-10 rotation plan: (a) any r9 gate that misses a driver stamp
-# this window (all nine r9-new/re-keyed kernels sit in positions 22-30
-# of this window, so they should stamp in r9 — verify in
-# CORRECTNESS_r09.json), then (b) r10-touched/new kernels, (c) the
-# r5/r6-only-stamped backlog in registry order: the seven bumped from
-# this window (cohort_retention, dedup_rows, doc_sample, funnel,
-# voom_loess3, vocab_size_sketch, venn_membership, term_enrichment)
-# FIRST, then the r6-only-stamped remainder.  (Compare r10 bench rows
-# against BOTH the r8 driver column (through its recorded host band)
-# and the r9 clean local column in BASELINE.md.)
-_ROUND10_FRONT = [
-    # -- (a) the seven bumped from the r9 window (r5-stamped; the
-    # eighth bump, vocab_size_sketch, is rows-only and stays OUT of
-    # front lists per the r9 verdict — no wasted no_oracle slots) ----
-    "cohort_retention", "dedup_rows", "doc_sample", "funnel",
-    "voom_loess3", "venn_membership", "term_enrichment",
-    # -- (b) r10-new kernels: the BY/holm completion of M10's adjust
-    # surface and the capacity-scaled perceptual near-dup twins ------
-    "p_adjust_by", "p_adjust_holm", "de_adjust_methods", "image_dhash_wide",
-    "audio_neardup_wide", "video_neardup", "tfrecord_roundtrip",
-    # -- (c) the r6-only-stamped backlog in registry order (56 total
-    # with (a)+(b); registry_upsert, full_outer_merge, htseq_scan,
-    # rsem_convert, idat_decode, detection_p slip to r11)
-    "merge_left_join", "interval_join", "quantile_thresholds",
-    "sample_correlation", "quantile_normalization", "diff_expression",
-    "stouffer_meta", "fem_rem", "bpe_encode", "ann_recall",
-    "png_pixels", "semdedup", "semdedup_2level", "quality_filter",
-    "gopher_quality", "moderated_de", "dup_correlation",
-    "lmfit_design", "impute_missing", "impute_em",
-    "median_polish_fixed", "logistic_irls2", "moderated_lmfit",
-    "voom_trend", "closed_pipeline", "normalized_de",
-    "rnaseq_pipeline_binned", "cqn_bias", "array_weights",
-    "qc_sample_metrics", "expression_pipeline", "weighted_de",
-    "dataset_group_means", "rollup_summary", "pivot_matrix",
-    "melt_measures",
-]
-
-# Round-11 rotation window (executed this round; CORRECTNESS_r10.json
-# confirmed every _ROUND10_FRONT slot stamped, including the late
-# de_adjust_methods): (a) the six r6-only-stamped gates that slipped
-# the r10 window, (b) r11-new gates (blocked_de = duplicateCorrelation
-# CONSUMED by the GLS DE fit; video_offset_neardup = the
-# offset-tolerant video tier) and r11-TOUCHED kernels that must
-# re-stamp under the reworked plans (incremental_dedup's broadcast
-# prefilter levers; the steps_per_cycle closure under dedup_clusters /
-# corpus_pipeline / leakage_split / dedup_keep_best; wordpiece_merges
-# under the trainer rework), (c) the r7-only-stamped backlog in
-# registry order, topped to ~50 with the oldest r8 rows.  Zero
-# rows-only slots.  (Compare r11 bench rows against the r10 driver
-# column through the host band recorded in BASELINE.md.)
 _ROUND11_FRONT = [
     # -- (a) r6-stamped slipped six ----------------------------------
     "registry_upsert", "full_outer_merge", "htseq_scan",

@@ -1,7 +1,7 @@
-"""Exercise the library paths no suite query reaches: the decimal-exact
-moment helpers (and their SQL twins vs DuckDB), the dense-matrix fill,
-the interval-join overlap contract, and the registry delta — the
-icc_blockmatrix lesson: an unexecuted path is an unverified path."""
+"""Unit checks for helpers that queries reach only end to end: the
+decimal-exact moment helpers every suite sums through (Column forms vs
+their DuckDB SQL twins), the dense-matrix fill, the interval-join
+overlap contract, and the registry delta."""
 
 from __future__ import annotations
 
@@ -30,7 +30,11 @@ def test_exact_helpers_match_duckdb_twins(spark):
         dsum("x").alias("sx"),
         dsum2("x").alias("sx2"),
         dsumprod("x", "y").alias("sxy"),
+        dsum(F.col("x")).alias("sx_col"),
+        dsum2(F.col("x")).alias("sx2_col"),
     ).collect()[0]
+    # a Column and a column name build the same sum
+    assert (got["sx_col"], got["sx2_col"]) == (got["sx"], got["sx2"])
     con = duckdb.connect()
     con.execute("CREATE TABLE t (x DOUBLE, y DOUBLE)")
     con.executemany("INSERT INTO t VALUES (?, ?)", rows)

@@ -397,19 +397,6 @@ def test_semdedup_drops_planted_twin_keeps_diverse(spark):
     solo = spark.createDataFrame(base, ["vec_id", "embedding"])
     kept_solo = semdedup(solo, n_cells=4, tau=0.999).collect()
     assert all(r["kept"] for r in kept_solo)
-    # the Arrow/BLAS scale path applies the identical cell + keep rule:
-    # kept flags match the JVM fold exactly away from the tau boundary
-    from transcriptomics_data_integration_spark.llmdata.similarity import (
-        semdedup_arrow,
-    )
-
-    arrow = {r["vec_id"]: r for r in semdedup_arrow(emb, n_cells=4, tau=0.999).collect()}
-    assert {v: r["kept"] for v, r in arrow.items()} == {
-        v: r["kept"] for v, r in out.items()
-    }
-    assert {v: r["cell"] for v, r in arrow.items()} == {
-        v: r["cell"] for v, r in out.items()
-    }
 
 
 def test_duplicate_chunk_stats_counts_cross_doc_repeats(spark):
@@ -1552,42 +1539,40 @@ def test_mask_frequent_ngrams_spans(spark):
     assert out2[1]["n_masked"] == 9
 
 
-def test_semdedup_arrow_empty_corpus_and_id_type(spark):
-    """semdedup_arrow on an empty corpus returns an empty result (the
-    center collect is empty — must short-circuit, not crash on a 1-D
-    empty center matrix), and non-bigint id columns flow through with
-    their own type instead of the previously hardcoded bigint schema
-    (r5 ADVICE)."""
+def test_semdedup_empty_corpus_and_id_type(spark):
+    """Both SemDeDup tiers return an empty result with the declared
+    columns on an empty corpus, and non-bigint id columns flow through
+    with their own type (string ids are out of contract — the
+    Knuth-hash center picker is integer arithmetic, mirrored in the
+    oracle)."""
     from transcriptomics_data_integration_spark.llmdata.similarity import (
-        semdedup_arrow,
+        semdedup,
+        semdedup_2level,
     )
 
     empty = spark.createDataFrame(
         [], "vec_id bigint, embedding array<double>"
     )
-    out = semdedup_arrow(empty)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "vec_id", "cell", "cos_centroid", "kept",
-    ]
-    # int ids: the declared schema must carry the input id type instead
-    # of silently widening to the previously hardcoded bigint (string
-    # ids are out of contract for BOTH tiers — the Knuth-hash center
-    # picker is integer arithmetic, mirrored in the oracle)
     rows = [
         (1, [1.0, 0.0, 0.0]),
         (2, [1.0, 0.0, 1e-9]),   # near-twin of 1
         (3, [0.0, 1.0, 0.0]),
     ]
     emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    res = semdedup_arrow(emb, n_cells=2, tau=0.999)
-    assert res.schema["vec_id"].dataType.simpleString() == "int"
-    got = {r["vec_id"]: r for r in res.collect()}
-    assert set(got) == {1, 2, 3}
-    assert got[3]["kept"]
-    # exactly one of the twin pair survives when they share a cell
-    if got[1]["cell"] == got[2]["cell"]:
-        assert got[1]["kept"] != got[2]["kept"]
+    for tier in (semdedup, semdedup_2level):
+        out = tier(empty)
+        assert out.count() == 0
+        assert [f.name for f in out.schema.fields] == [
+            "vec_id", "cell", "cos_centroid", "kept",
+        ]
+        res = tier(emb, n_cells=2, tau=0.999)
+        assert res.schema["vec_id"].dataType.simpleString() == "int"
+        got = {r["vec_id"]: r for r in res.collect()}
+        assert set(got) == {1, 2, 3}
+        assert got[3]["kept"]
+        # exactly one of the twin pair survives when they share a cell
+        if got[1]["cell"] == got[2]["cell"]:
+            assert got[1]["kept"] != got[2]["kept"]
 
 
 def test_connected_components_stars_matches_labelprop(spark):
@@ -1634,16 +1619,14 @@ def test_connected_components_stars_matches_labelprop(spark):
 
 
 def test_semdedup_2level_tiers_agree_and_drop_twins(spark):
-    """The JVM and Arrow two-level quantizer tiers produce identical
-    cells and kept flags (away from the tau boundary), planted
-    near-twins colocate and exactly one member survives, and the empty
-    corpus short-circuits (r5 verdict item 2 — the billion-scale
+    """The two-level quantizer tier colocates planted near-twins and
+    keeps exactly one member, keeps every untouched vector, and returns
+    nothing for an empty corpus (r5 verdict item 2 — the billion-scale
     assignment path)."""
     import random
 
     from transcriptomics_data_integration_spark.llmdata.similarity import (
         semdedup_2level,
-        semdedup_arrow_2level,
     )
 
     rnd = random.Random(11)
@@ -1651,25 +1634,14 @@ def test_semdedup_2level_tiers_agree_and_drop_twins(spark):
         (i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(150)
     ]
     # perturbation large enough that the twin/original cos_centroid
-    # gap is resolvable in BOTH float summation orders (JVM fold vs
-    # BLAS), small enough to stay >= tau similar
+    # gap is resolvable, small enough to stay >= tau similar
     twins = [(i + 1000, [x + 1e-4 for x in v]) for i, v in base[:40]]
     emb = spark.createDataFrame(base + twins, ["vec_id", "embedding"])
     jvm = {
         r["vec_id"]: r
         for r in semdedup_2level(emb, n_cells=8, tau=0.999).collect()
     }
-    arw = {
-        r["vec_id"]: r
-        for r in semdedup_arrow_2level(emb, n_cells=8, tau=0.999).collect()
-    }
-    assert set(jvm) == set(arw) and len(jvm) == 190
-    assert {k: v["kept"] for k, v in jvm.items()} == {
-        k: v["kept"] for k, v in arw.items()
-    }
-    assert {k: v["cell"] for k, v in jvm.items()} == {
-        k: v["cell"] for k, v in arw.items()
-    }
+    assert len(jvm) == 190
     colocated = 0
     for i, _ in base[:40]:
         a, b = jvm[i], jvm[i + 1000]
@@ -1682,9 +1654,8 @@ def test_semdedup_2level_tiers_agree_and_drop_twins(spark):
     # untouched vectors (no twin) are always kept
     for i, _ in base[40:]:
         assert jvm[i]["kept"], i
-    # empty corpus: both tiers short-circuit
+    # empty corpus: empty result
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
-    assert semdedup_arrow_2level(empty).count() == 0
     assert semdedup_2level(empty).count() == 0
 
 
@@ -4196,14 +4167,17 @@ def test_incremental_dedup_band_index_and_no_broadcast_match(spark):
     assert no_bcast == direct
 
 
-def test_incremental_dedup_auto_arm_selection(spark, tmp_path, caplog):
+def test_incremental_dedup_auto_arm_selection(spark, tmp_path, caplog, monkeypatch):
     """r12: broadcast_batch=None self-selects the arm from Catalyst's
     plan-size estimate.  A small PARQUET-backed batch (the gate shape —
     file-size statistics exist) picks the broadcast arm; an RDD-backed
-    batch (createDataFrame — unknown stats, Long.MaxValue sentinel)
-    falls back to the always-safe shuffle arm; both arms produce
+    batch (createDataFrame — unknown stats) and a failed estimate both
+    fall back to the always-safe shuffle arm; both arms produce
     identical rows."""
+    import re
+
     from transcriptomics_data_integration_spark.llmdata import dedup as dd
+    from transcriptomics_data_integration_spark.operators import windows as ww
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     mem_existing = spark.createDataFrame(
@@ -4219,10 +4193,31 @@ def test_incremental_dedup_auto_arm_selection(spark, tmp_path, caplog):
     mem_incoming.write.parquet(p_in)
     existing, incoming = spark.read.parquet(p_ex), spark.read.parquet(p_in)
     # parquet-backed: file-size estimate, tiny -> broadcast arm
-    est = dd._plan_size_bytes(incoming)
-    assert 0 < est < dd.INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
-    # RDD-backed: unknown stats -> the Long.MaxValue sentinel -> shuffle arm
-    assert dd._plan_size_bytes(mem_incoming) > dd.INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
+    est = ww.estimated_plan_bytes(incoming)
+    assert est is not None and 0 < est < dd.INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
+    # RDD-backed: unknown stats (Long.MaxValue) -> no estimate -> shuffle arm
+    assert ww.estimated_plan_bytes(mem_incoming) is None
+
+    def plan(batch, **kw):
+        df = dd.incremental_minhash_dedup(existing, batch, "doc_id", **kw)
+        return re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
+
+    shuffle_plan = plan(mem_incoming, broadcast_batch=False)
+    assert shuffle_plan != plan(mem_incoming, broadcast_batch=True)
+    assert plan(mem_incoming) == shuffle_plan
+    assert plan(incoming) == plan(incoming, broadcast_batch=True)
+    # a failed estimate takes the shuffle arm and says so once, naming
+    # the exception (plans are compared before any collect materializes
+    # the cached index, which changes its plan string)
+    caplog.clear()
+    with monkeypatch.context() as m, caplog.at_level(logging.WARNING, logger=ww.__name__):
+        m.setattr(
+            dd, "estimated_plan_bytes", lambda df: ww.estimated_plan_bytes(object())
+        )
+        assert plan(mem_incoming) == shuffle_plan
+    warned = [r for r in caplog.records if r.name == ww.__name__]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "AttributeError" in warned[0].getMessage()
     auto_bcast = sorted(
         map(
             tuple,
@@ -4242,15 +4237,6 @@ def test_incremental_dedup_auto_arm_selection(spark, tmp_path, caplog):
     finally:
         dd.INCREMENTAL_BROADCAST_AUTO_MAX_BYTES = old
     assert auto_shuffle == auto_bcast
-    # an unestimable plan falls back to the huge sentinel (shuffle arm)
-    # and says so once, naming the exception
-    caplog.clear()
-    with caplog.at_level(logging.WARNING, logger=dd.__name__):
-        assert dd._plan_size_bytes(None) == 1 << 62
-    warned = [r for r in caplog.records if r.name == dd.__name__]
-    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
-    assert "AttributeError" in warned[0].getMessage()
-    assert "forced to shuffle" in warned[0].getMessage()
 
 
 def test_minhash_index_bucketed_roundtrip(spark, tmp_path):

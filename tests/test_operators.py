@@ -231,6 +231,21 @@ def test_estimated_plan_bytes_known_and_bounded(spark):
     assert size is not None and 0 < size < (1 << 40)
 
 
+def test_estimated_plan_bytes_failure_returns_none_and_warns_once(caplog):
+    """A failed estimate is "not small" (None), and the silent switch to
+    the scale-safe plan it causes is logged once, naming the exception."""
+    import logging
+
+    from transcriptomics_data_integration_spark.operators import windows
+
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger=windows.__name__):
+        assert windows.estimated_plan_bytes(object()) is None
+    warned = [r for r in caplog.records if r.name == windows.__name__]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "AttributeError" in warned[0].getMessage()
+
+
 def test_dabg_filter_exact_reference_semantics(spark):
     """dabg_filter (F9, r8): the 3-condition DABG pipeline of
     `GenExpressionComb_Affy_HuEx1ST_DABGfilter.R:245-308` on a

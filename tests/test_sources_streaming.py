@@ -794,22 +794,23 @@ def test_parse_cel_v4_roundtrip_and_rejects():
     """The CEL v4 parser recovers the planted grid bit-exactly and
     rejects wrong-magic / wrong-version / truncated payloads instead
     of mis-reading them."""
-    from transcriptomics_data_integration_spark.sources.cel import parse_cel_v4
+    from transcriptomics_data_integration_spark.sources.cel import parse_cel_v4_arrays
 
     cells = [(101.5, 3.25, 9), (7.0, 1.0, 16), (2.5, 0.5, 25), (65535.0, 2.0, 36)]
     good = _cel_bytes(2, 2, cells)
-    ncols, nrows, parsed = parse_cel_v4(good)
+    ncols, nrows, parsed = parse_cel_v4_arrays(good)
     assert (ncols, nrows) == (2, 2)
-    # row-major: index = y * ncols + x
-    assert parsed[1][:2] == (1, 0) and parsed[2][:2] == (0, 1)
-    assert [c[2:] for c in parsed] == cells
-    assert parse_cel_v4(_cel_bytes(2, 2, cells, magic=65)) is None
-    assert parse_cel_v4(_cel_bytes(2, 2, cells, version=3)) is None
-    assert parse_cel_v4(good[:-5]) is None  # truncated cell block
-    assert parse_cel_v4(b"") is None
+    # row-major cell order, in the planted order: index = y * ncols + x
+    assert [
+        (float(c["intensity"]), float(c["stdev"]), int(c["npixels"])) for c in parsed
+    ] == cells
+    assert parse_cel_v4_arrays(_cel_bytes(2, 2, cells, magic=65)) is None
+    assert parse_cel_v4_arrays(_cel_bytes(2, 2, cells, version=3)) is None
+    assert parse_cel_v4_arrays(good[:-5]) is None  # truncated cell block
+    assert parse_cel_v4_arrays(b"") is None
     # ncells inconsistent with the grid
     bad = _cel_bytes(2, 2, cells[:3])
-    assert parse_cel_v4(bad) is None
+    assert parse_cel_v4_arrays(bad) is None
 
 
 def _idat_bytes(ids, means, sds, beads, magic=b"IDAT", version=3,

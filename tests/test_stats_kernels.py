@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.stats import (
-    bh_adjust,
-    bh_adjust_histogram,
+    p_adjust,
+    p_adjust_histogram,
     fem_rem_effects,
     quantile_normalize,
     stouffer_combine,
@@ -27,7 +27,7 @@ def test_bh_matches_r_p_adjust(spark):
     )
     out = {
         r["gene"]: r["adj"]
-        for r in bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()
+        for r in p_adjust(df, "p", "adj", tiebreak_col="gene").collect()
     }
     assert out["g1"] == pytest.approx(1 / 30)
     assert out["g2"] == pytest.approx(1 / 30)
@@ -49,11 +49,11 @@ def test_bh_histogram_matches_sort_window(spark):
     df = spark.createDataFrame(rows, ["gene", "p"])
     exact = {
         r["gene"]: r["adj"]
-        for r in bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()
+        for r in p_adjust(df, "p", "adj", tiebreak_col="gene").collect()
     }
     hist = {
         r["gene"]: r["adj"]
-        for r in bh_adjust_histogram(
+        for r in p_adjust_histogram(
             df, "p", "adj", tiebreak_col="gene", n_buckets=8
         ).collect()
     }
@@ -66,11 +66,6 @@ def test_by_matches_r_p_adjust(spark):
     # (BH times c(5) = 1 + 1/2 + 1/3 + 1/4 + 1/5 = 2.2833...; the .5
     # row clamps at 1).  Asserted to the last ulp of R's left-fold
     # harmonic — the engine replays R's exact operand order.
-    from transcriptomics_data_integration_spark.stats import (
-        by_adjust,
-        by_adjust_histogram,
-    )
-
     df = spark.createDataFrame(
         [("g1", 0.01), ("g2", 0.02), ("g3", 0.02), ("g4", 0.5), ("g5", 0.04)],
         ["gene", "p"],
@@ -82,10 +77,10 @@ def test_by_matches_r_p_adjust(spark):
         "g4": 1.0,
         "g5": 0.11416666666666667,
     }
-    for fn in (by_adjust, by_adjust_histogram):
+    for fn in (p_adjust, p_adjust_histogram):
         out = {
             r["gene"]: r["adj"]
-            for r in fn(df, "p", "adj", tiebreak_col="gene").collect()
+            for r in fn(df, "p", "adj", method="BY", tiebreak_col="gene").collect()
         }
         assert out == expected  # dict equality => bitwise-equal doubles
 
@@ -95,20 +90,15 @@ def test_holm_matches_r_p_adjust(spark):
     #    -> 0.05 0.08 0.08 0.50 0.08
     # (step-down: tied .02s and the .04 all collapse to 4*.02 = .08
     # under the forward cummax)
-    from transcriptomics_data_integration_spark.stats import (
-        holm_adjust,
-        holm_adjust_histogram,
-    )
-
     df = spark.createDataFrame(
         [("g1", 0.01), ("g2", 0.02), ("g3", 0.02), ("g4", 0.5), ("g5", 0.04)],
         ["gene", "p"],
     )
     expected = {"g1": 0.05, "g2": 0.08, "g3": 0.08, "g4": 0.5, "g5": 0.08}
-    for fn in (holm_adjust, holm_adjust_histogram):
+    for fn in (p_adjust, p_adjust_histogram):
         out = {
             r["gene"]: r["adj"]
-            for r in fn(df, "p", "adj", tiebreak_col="gene").collect()
+            for r in fn(df, "p", "adj", method="holm", tiebreak_col="gene").collect()
         }
         assert out == expected
 
@@ -119,11 +109,11 @@ def test_p_adjust_dispatch_and_de_wiring(spark):
     # 'fdr' aliases BH, 'none' is the identity, unknown raises; and
     # the DE pipeline's `adjust=` parameter reaches the kernel (BY
     # inflates every non-clamped adjusted p by the harmonic factor).
-    from transcriptomics_data_integration_spark.stats import bh_adjust, p_adjust
+    from transcriptomics_data_integration_spark.stats import p_adjust
 
     rows = [(f"g{i}", ((i * 37) % 97 + 1) / 100.0) for i in range(50)]
     df = spark.createDataFrame(rows, ["gene", "p"])
-    bh = {r["gene"]: r["adj"] for r in bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()}
+    bh = {r["gene"]: r["adj"] for r in p_adjust(df, "p", "adj", tiebreak_col="gene").collect()}
     fdr = {r["gene"]: r["adj"] for r in p_adjust(df, "p", "adj", method="fdr", tiebreak_col="gene").collect()}
     assert fdr == bh
     none = {r["gene"]: r["adj"] for r in p_adjust(df, "p", "adj", method="none").collect()}
@@ -173,7 +163,7 @@ def test_bh_monotone_and_bounded(spark):
     # pipeline invariant (SURVEY.md section 5.3): adj p >= raw p, <= 1
     rows = [(f"g{i}", ((i * 37) % 97 + 1) / 100.0) for i in range(50)]
     df = spark.createDataFrame(rows, ["gene", "p"])
-    out = bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()
+    out = p_adjust(df, "p", "adj", tiebreak_col="gene").collect()
     for r in out:
         assert r["adj"] >= r["p"] - 1e-15
         assert r["adj"] <= 1.0
@@ -371,11 +361,11 @@ def test_bh_histogram_property_random_psets(spark):
         df = spark.createDataFrame(rows, ["gene", "p"])
         exact = {
             r["gene"]: r["adj"]
-            for r in bh_adjust(df, "p", "adj", tiebreak_col="gene").collect()
+            for r in p_adjust(df, "p", "adj", tiebreak_col="gene").collect()
         }
         hist = {
             r["gene"]: r["adj"]
-            for r in bh_adjust_histogram(
+            for r in p_adjust_histogram(
                 df, "p", "adj", tiebreak_col="gene", n_buckets=rnd.choice([2, 7, 64])
             ).collect()
         }
@@ -393,8 +383,8 @@ def test_bh_property_random_ties_match_r_padjust(spark):
     from hypothesis import strategies as st
 
     from transcriptomics_data_integration_spark.stats.bh import (
-        bh_adjust,
-        bh_adjust_histogram,
+        p_adjust,
+        p_adjust_histogram,
     )
 
     def r_p_adjust_bh(ps):
@@ -425,8 +415,8 @@ def test_bh_property_random_ties_match_r_padjust(spark):
             [(i, float(p)) for i, p in enumerate(ps)], "id long, p double"
         )
         for variant in (
-            lambda d: bh_adjust(d, "p", "adj", tiebreak_col="id"),
-            lambda d: bh_adjust_histogram(d, "p", "adj", tiebreak_col="id", n_buckets=8),
+            lambda d: p_adjust(d, "p", "adj", tiebreak_col="id"),
+            lambda d: p_adjust_histogram(d, "p", "adj", tiebreak_col="id", n_buckets=8),
         ):
             got = {r["id"]: r["adj"] for r in variant(df).collect()}
             for i, e in enumerate(expected):
@@ -461,29 +451,29 @@ def test_quantile_norm_average_ties_matches_r_semantics(spark):
 
 
 def test_bh_adjust_delegates_to_histogram_above_single_task_size(spark, tmp_path):
-    """Unpartitioned bh_adjust must route to the bucket-partitioned
+    """Unpartitioned p_adjust must route to the bucket-partitioned
     histogram form when Catalyst cannot prove the p-set small (local
     relations report unknown stats), and keep the simple sort window
     for provably-small parquet inputs."""
-    from transcriptomics_data_integration_spark.stats.bh import bh_adjust
+    from transcriptomics_data_integration_spark.stats.bh import p_adjust
 
     # unknown stats (local relation) -> conservative histogram plan
     local = spark.createDataFrame(
         [(i, (i % 97) / 97.0) for i in range(200)], "gene long, p double"
     )
-    plan_local = bh_adjust(local, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
+    plan_local = p_adjust(local, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
     assert "_bkt" in plan_local
 
     # small parquet input -> plain sort-window plan (no buckets)
     d = str(tmp_path / "p")
     local.write.parquet(d)
     small = spark.read.parquet(d)
-    plan_small = bh_adjust(small, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
+    plan_small = p_adjust(small, "p", "adj", tiebreak_col="gene")._jdf.queryExecution().optimizedPlan().toString()
     assert "_bkt" not in plan_small
 
     # both produce identical values
-    a = sorted((r["gene"], r["adj"]) for r in bh_adjust(local, "p", "adj", tiebreak_col="gene").collect())
-    b = sorted((r["gene"], r["adj"]) for r in bh_adjust(small, "p", "adj", tiebreak_col="gene").collect())
+    a = sorted((r["gene"], r["adj"]) for r in p_adjust(local, "p", "adj", tiebreak_col="gene").collect())
+    b = sorted((r["gene"], r["adj"]) for r in p_adjust(small, "p", "adj", tiebreak_col="gene").collect())
     assert a == b
 
 

@@ -30,18 +30,24 @@ from pyspark.sql import functions as F
 _PREC = 18
 
 
-def dsum(col: str, scale: int = 2) -> Column:
+def dec(col: str | Column, scale: int = 2) -> Column:
+    """``col`` (a name or a Column) as ``decimal(18, scale)``."""
+    c = F.col(col) if isinstance(col, str) else col
+    return c.cast(f"decimal({_PREC},{scale})")
+
+
+def dsum(col: str | Column, scale: int = 2) -> Column:
     """Exact SUM via decimal, returned as double."""
-    return F.sum(F.col(col).cast(f"decimal({_PREC},{scale})")).cast("double")
+    return F.sum(dec(col, scale)).cast("double")
 
 
 def dsum_sql(col: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({col} AS DECIMAL({_PREC},{scale}))) AS DOUBLE)"
 
 
-def dsum2(col: str, scale: int = 2) -> Column:
+def dsum2(col: str | Column, scale: int = 2) -> Column:
     """Exact SUM of squares via decimal product, as double."""
-    c = F.col(col).cast(f"decimal({_PREC},{scale})")
+    c = dec(col, scale)
     return F.sum((c * c).cast(f"decimal(38,{2 * scale})")).cast("double")
 
 
@@ -50,9 +56,10 @@ def dsum2_sql(col: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({c} * {c} AS DECIMAL(38,{2 * scale}))) AS DOUBLE)"
 
 
-def dsumprod(a: str, b: str, scale_a: int = 2, scale_b: int = 2) -> Column:
-    ca = F.col(a).cast(f"decimal({_PREC},{scale_a})")
-    cb = F.col(b).cast(f"decimal({_PREC},{scale_b})")
+def dsumprod(
+    a: str | Column, b: str | Column, scale_a: int = 2, scale_b: int = 2
+) -> Column:
+    ca, cb = dec(a, scale_a), dec(b, scale_b)
     return F.sum((ca * cb).cast(f"decimal(38,{scale_a + scale_b})")).cast("double")
 
 

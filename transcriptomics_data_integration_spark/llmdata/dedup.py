@@ -22,16 +22,14 @@ Scale notes (the reason each variant exists):
 
 from __future__ import annotations
 
-import logging
 import re
 
-from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.operators.windows import estimated_plan_bytes
 from transcriptomics_data_integration_spark.runtime import register_persisted
 
-_log = logging.getLogger(__name__)
 
 SHINGLE_LEN = 5
 N_HASHES = 16
@@ -1512,23 +1510,6 @@ def read_minhash_index(spark, table_prefix: str) -> tuple[DataFrame, DataFrame]:
 INCREMENTAL_BROADCAST_AUTO_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate in bytes — plan-build
-    only, runs no job.  Unavailable estimates return a huge sentinel
-    so the caller's auto-selection falls back to the arm that is safe
-    at any size (the shuffle arm), and log a WARNING saying so."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except (Py4JError, AttributeError, TypeError, ValueError) as exc:
-        _log.warning(
-            "plan-size estimate failed (%s: %s); incremental dedup arm "
-            "forced to shuffle",
-            type(exc).__name__,
-            exc,
-        )
-        return 1 << 62
-
-
 def incremental_minhash_dedup(
     existing: DataFrame,
     incoming: DataFrame,
@@ -1623,8 +1604,9 @@ def incremental_minhash_dedup(
         content_digest(F.col(text_col)).alias("digest"),
     )
     if broadcast_batch is None:
+        size = estimated_plan_bytes(incoming)
         broadcast_batch = (
-            _plan_size_bytes(incoming) <= INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
+            size is not None and size <= INCREMENTAL_BROADCAST_AUTO_MAX_BYTES
         )
     if existing_index is None:
         # built in-query: cache it — ex_digest, band keys, and the

@@ -17,6 +17,9 @@
   memory-compression path that lets a 100 TB embedding corpus live at
   RAM scale.  Arrow-batched numpy, never per-row Python.
 - ``quantize_embeddings``: int8 scalar quantization.
+- ``semdedup`` / ``semdedup_2level``: SemDeDup semantic dedup with a
+  flat or a two-level coarse quantizer — JVM folds only, so both are
+  DuckDB-oracle-gated.
 
 The exact paths avoid Python UDFs entirely: the fold is Spark's
 ``aggregate`` higher-order function, JVM-side.  ``cosine_topk`` is the
@@ -927,287 +930,6 @@ def semdedup_2level(
         .select("cand_id", "cell", "c_vec", "_vnorm", "cos_centroid")
     )
     return _semdedup_flag(scored, id_col, tau, dim)
-
-
-def semdedup_arrow(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    tau: float = 0.9,
-) -> DataFrame:
-    """Arrow scale path of :func:`semdedup` — same cells, same
-    keep-lowest-centroid-cosine rule, with BLAS doing the work: the
-    assignment is a chunked single-GEMM argmin (1 024 cells per chunk
-    — bounded temporaries, bitwise-identical cell choice; r6) and the
-    within-cell pair sweep is the blocked preference-order pass of
-    :func:`_make_arrow_sweep` (O(block * |cell|) peak memory under the
-    measured Voronoi skew).  Float summation order differs from the
-    JVM folds, so this is the rows-only tier (the ivf_ann / ivf_fixed
-    split) — kept flags match the JVM path except for cosines within
-    float error of ``tau``.
-
-    Probed at 1M/3.3M/10M vectors with cells ∝ corpus (PLANS.md r6):
-    23 / 117 / 246 s — the fastest tier through k ≈ 5 000; at the
-    SemDeDup paper's k ~ 10^5 the n*k*d assignment flops take over and
-    :func:`semdedup_arrow_2level` is the right tier.
-    """
-    import numpy as np
-    import pandas as pd
-
-    base = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec")
-    )
-    # the bounded center matrix is collected at plan build (n_cells x d
-    # doubles) and shipped in the task closure, so assignment + scoring
-    # are one numpy pass — no per-vector JVM folds anywhere in this path
-    id_type = base.schema["cand_id"].dataType.simpleString()
-    vec_type = base.schema["c_vec"].dataType.simpleString()
-    out_schema = (
-        f"cand_id {id_type}, cell int, cos_centroid double, kept boolean"
-    )
-    center_rows = _hash_pick_centers(base, n_cells).orderBy("cell").collect()
-    if not center_rows:
-        # empty corpus: no centers — short-circuit with an empty result
-        # instead of letting a 1-D empty C break the axis=1 reductions
-        spark = embeddings.sparkSession
-        return spark.createDataFrame([], out_schema).select(
-            F.col("cand_id").alias(id_col), "cell", "cos_centroid", "kept"
-        )
-    C = np.asarray([list(r["center"]) for r in center_rows], dtype=np.float64)
-    c_norm2 = (C * C).sum(axis=1)
-
-    def assign_score(batches):
-        # chunked argmin over the codebook (r6): the one-shot form
-        # materialized an n_batch x k distance matrix (400 MB per
-        # Arrow batch at k=5000 — the measured 10M-flat collapse,
-        # PLANS.md) AND ran the V @ C.T GEMM twice (once for
-        # distances, once for the picked dot products).  Chunking
-        # bounds the temporaries at n_batch x 1024 and reuses one
-        # GEMM per chunk; assignment is bitwise identical (same d2
-        # elements; within-chunk argmin takes the first minimum and
-        # the strict < across chunks keeps the earlier = smaller
-        # cell, exactly the flat argmin's tie rule).
-        chunk = 1024
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["c_vec"]]
-            )
-            n = len(V)
-            vn2 = (V * V).sum(axis=1)
-            rows = np.arange(n)
-            best_d2 = np.full(n, np.inf)
-            best_cell = np.zeros(n, dtype=np.int64)
-            best_vc = np.zeros(n)
-            for s in range(0, C.shape[0], chunk):
-                e = min(s + chunk, C.shape[0])
-                G = V @ C[s:e].T
-                d2 = vn2[:, None] - 2.0 * G + c_norm2[s:e][None, :]
-                loc = d2.argmin(axis=1)
-                ld2 = d2[rows, loc]
-                upd = ld2 < best_d2
-                best_d2[upd] = ld2[upd]
-                best_cell[upd] = loc[upd] + s
-                best_vc[upd] = G[rows, loc][upd]
-            cell = best_cell
-            vn = np.sqrt(vn2)
-            cn = np.sqrt(c_norm2[cell])
-            denom = vn * cn
-            cc = np.where(denom > 0, best_vc / np.where(denom > 0, denom, 1.0), 0.0)
-            yield pd.DataFrame(
-                {
-                    "cand_id": pdf["cand_id"].to_numpy(),
-                    "cell": cell.astype(np.int32),
-                    "c_vec": pdf["c_vec"],
-                    "cos_centroid": cc,
-                }
-            )
-
-    scored = base.mapInPandas(
-        assign_score,
-        schema=f"cand_id {id_type}, cell int, c_vec {vec_type}, cos_centroid double",
-    )
-
-    out = scored.groupBy("cell").applyInPandas(
-        _make_arrow_sweep(tau), schema=out_schema
-    )
-    return out.select(
-        F.col("cand_id").alias(id_col), "cell", "cos_centroid", "kept"
-    )
-
-
-def _make_arrow_sweep(tau: float, block: int = 1024):
-    """Per-cell BLAS pair sweep for the Arrow SemDeDup tiers.  Drop
-    rule: a row is dropped iff some EARLIER row in (cos_centroid, id)
-    preference order is >= tau similar — identical to the JVM pair
-    sweep.
-
-    BLOCKED evaluation (r6): hash-picked centers produce skewed
-    Voronoi cells (measured at 1 M vectors / 500 cells: max |cell|
-    21 347 vs median 1 205 — distance concentration in high dim), and
-    the r5 full-matrix form materialized S (|cell|^2 doubles), a
-    fancy-index permuted copy, and two boolean temporaries — ~8 GB of
-    allocation churn for the largest cell.  Instead: sort once into
-    preference order, then for each ~1k-row block compute only
-    ``block x prefix`` similarities against the rows that precede it
-    (same flops, O(block * |cell|) peak memory, no permutation copy).
-    Measured 1 M x 500 cells: sweep stage 235 s -> see PLANS.md r6.
-    """
-    import numpy as np
-    import pandas as pd
-
-    def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["cand_id"].to_numpy()
-        cc = pdf["cos_centroid"].to_numpy()
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["c_vec"]])
-        norms = np.sqrt((V * V).sum(axis=1))
-        safe = norms > 0
-        Vn = np.where(safe[:, None], V / np.where(safe, norms, 1.0)[:, None], 0.0)
-        n = len(ids)
-        order = np.lexsort((ids, cc))
-        Vo = Vn[order]
-        dropped_ord = np.zeros(n, dtype=bool)
-        # row 0 is never dropped; evaluate blocks against their prefix
-        for s in range(1, n, block):
-            e = min(s + block, n)
-            sim = Vo[s:e] @ Vo[:e].T  # (e-s) x e, bounded
-            hit = sim >= tau
-            drop = hit[:, :s].any(axis=1)
-            # intra-block: row s+j compares to columns s..s+j-1
-            intra = np.tril(hit[:, s:e], -1).any(axis=1)
-            dropped_ord[s:e] = drop | intra
-        dropped = np.empty(n, dtype=bool)
-        dropped[order] = dropped_ord
-        return pd.DataFrame(
-            {
-                "cand_id": ids,
-                "cell": pdf["cell"].to_numpy(),
-                "cos_centroid": cc,
-                "kept": ~dropped,
-            }
-        )
-
-    return sweep
-
-
-def semdedup_arrow_2level(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    tau: float = 0.9,
-    n_coarse: int | None = None,
-) -> DataFrame:
-    """Arrow/BLAS tier of :func:`semdedup_2level` — the BILLION-SCALE
-    assignment path.  Identical two-level cell semantics (level-1
-    group via the first ``n_coarse`` hash-picked centers, then argmin
-    among that group's centers, ties to the smaller cell id), with the
-    assignment running as numpy matmuls per Arrow batch:
-    ``n x n_coarse`` for level 1 plus ``n x E[k/n_coarse]`` for level 2
-    — n * O(sqrt(k)) * d total, ~linear in n when k scales with the
-    corpus (probed at 10 M vectors, PLANS.md r6).
-
-    The (k x d) codebook is shipped via ``SparkContext.broadcast``
-    (torrent, one copy per executor) rather than closure capture —
-    at the paper's 10^5-center scale the codebook is tens-to-hundreds
-    of MB, beyond task-closure hygiene.  Float summation order differs
-    from the JVM folds, so like :func:`semdedup_arrow` this is the
-    rows-only tier: kept flags match :func:`semdedup_2level` except
-    for cosines within float error of ``tau``.
-    """
-    import numpy as np
-    import pandas as pd
-
-    base = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec")
-    )
-    id_type = base.schema["cand_id"].dataType.simpleString()
-    vec_type = base.schema["c_vec"].dataType.simpleString()
-    out_schema = (
-        f"cand_id {id_type}, cell int, cos_centroid double, kept boolean"
-    )
-    center_rows = _hash_pick_centers(base, n_cells).orderBy("cell").collect()
-    if not center_rows:
-        spark = embeddings.sparkSession
-        return spark.createDataFrame([], out_schema).select(
-            F.col("cand_id").alias(id_col), "cell", "cos_centroid", "kept"
-        )
-    C = np.asarray([list(r["center"]) for r in center_rows], dtype=np.float64)
-    k = C.shape[0]
-    if n_coarse is None:
-        n_coarse = max(1, int(math.isqrt(max(n_cells - 1, 0))) + 1)
-    n_coarse = min(n_coarse, k)
-    C1 = C[:n_coarse]
-    # center -> level-1 group (k x n_coarse, plan-bounded; argmin ties
-    # to the smaller group id = np.argmin's first-hit rule)
-    d2_cg = (
-        (C * C).sum(axis=1)[:, None]
-        - 2.0 * (C @ C1.T)
-        + (C1 * C1).sum(axis=1)[None, :]
-    )
-    grp_of_center = d2_cg.argmin(axis=1)
-    # a group center always belongs to its OWN group (mirrors the JVM
-    # tier: only exact-duplicate ties could reassign it, which would
-    # leave the group empty for the vectors that tie-break into it)
-    grp_of_center[:n_coarse] = np.arange(n_coarse)
-    # per-group member lists, cell ids ascending (tie rule)
-    members = [np.flatnonzero(grp_of_center == g) for g in range(n_coarse)]
-    sc = embeddings.sparkSession.sparkContext
-    bc = sc.broadcast((C, C1, members))
-
-    def assign_score(batches):
-        Cb, C1b, mem = bc.value
-        c1n2 = (C1b * C1b).sum(axis=1)
-        cn2 = (Cb * Cb).sum(axis=1)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["c_vec"]]
-            )
-            vn2 = (V * V).sum(axis=1)
-            g = (
-                vn2[:, None] - 2.0 * (V @ C1b.T) + c1n2[None, :]
-            ).argmin(axis=1)
-            cell = np.empty(len(V), dtype=np.int64)
-            vc = np.empty(len(V), dtype=np.float64)
-            for gg in np.unique(g):
-                idx = mem[gg]
-                rows = np.flatnonzero(g == gg)
-                if len(idx) == 0:
-                    # a group with no members keeps its level-1 center
-                    # as the cell (gg < n_coarse <= k is a real cell)
-                    idx = np.asarray([gg])
-                sub = V[rows] @ Cb[idx].T
-                d2 = vn2[rows][:, None] - 2.0 * sub + cn2[idx][None, :]
-                pick = d2.argmin(axis=1)
-                cell[rows] = idx[pick]
-                vc[rows] = sub[np.arange(len(rows)), pick]
-            vn = np.sqrt(vn2)
-            cn = np.sqrt(cn2[cell])
-            denom = vn * cn
-            cc = np.where(denom > 0, vc / np.where(denom > 0, denom, 1.0), 0.0)
-            yield pd.DataFrame(
-                {
-                    "cand_id": pdf["cand_id"].to_numpy(),
-                    "cell": cell.astype(np.int32),
-                    "c_vec": pdf["c_vec"],
-                    "cos_centroid": cc,
-                }
-            )
-
-    scored = base.mapInPandas(
-        assign_score,
-        schema=f"cand_id {id_type}, cell int, c_vec {vec_type}, cos_centroid double",
-    )
-    out = scored.groupBy("cell").applyInPandas(
-        _make_arrow_sweep(tau), schema=out_schema
-    )
-    return out.select(
-        F.col("cand_id").alias(id_col), "cell", "cos_centroid", "kept"
-    )
 
 
 def quantize_embeddings(

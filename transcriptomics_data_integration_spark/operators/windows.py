@@ -2,8 +2,13 @@
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 def top_k_by(df: DataFrame, order_col: str, k: int, tiebreak_col: str, desc: bool = True) -> DataFrame:
@@ -34,8 +39,10 @@ _SINGLE_TASK_BYTES = 64 << 20
 
 def estimated_plan_bytes(df: DataFrame) -> int | None:
     """Catalyst's size-in-bytes estimate for ``df`` (driver-side plan
-    statistics; runs no job).  ``None`` when the estimate is
-    unavailable — callers must treat that as \"not small\"."""
+    statistics; runs no job).  ``None`` when the estimate is unknown or
+    the lookup fails — callers must treat that as \"not small\".  A
+    failure logs one WARNING naming the exception, since it silently
+    moves every auto-selecting caller onto its scale-safe plan."""
     try:
         # OPTIMIZED plan: the analyzed-plan estimate pre-dates column
         # pruning, so post-aggregate relations derived from wide fact
@@ -47,10 +54,17 @@ def estimated_plan_bytes(df: DataFrame) -> int | None:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         raw = stats.sizeInBytes()  # py4j yields int for small BigInts
         size = int(raw) if isinstance(raw, int) else int(raw.toString())
-        # Long.MaxValue et al. mean "unknown", not "huge known"
-        return size if 0 <= size < (1 << 60) else None
-    except Exception:  # pragma: no cover - py4j / plan-shape drift
+    except (Py4JError, AttributeError, TypeError, ValueError) as exc:
+        _log.warning(
+            "plan-size estimate failed (%s: %s); treating the relation "
+            "as not small, so auto-selecting operators take their "
+            "scale-safe plan",
+            type(exc).__name__,
+            exc,
+        )
         return None
+    # Long.MaxValue et al. mean "unknown", not "huge known"
+    return size if 0 <= size < (1 << 60) else None
 
 
 def fits_single_task(df: DataFrame, threshold_bytes: int = _SINGLE_TASK_BYTES) -> bool:
@@ -84,7 +98,7 @@ def monotone_range_buckets(
     keys buckets skew; AQE skew-split covers the imbalance, and the
     algebra stays exact regardless of skew.
 
-    Same pattern as ``stats.bh.bh_adjust_histogram`` (p in [0,1] lets
+    Same pattern as ``stats.bh.p_adjust_histogram`` (p in [0,1] lets
     that one skip the bounds pass).
     """
     bounds = df.agg(

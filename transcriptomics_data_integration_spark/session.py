@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "transcriptomics-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -46,6 +46,11 @@ def get_spark(app_name: str = "transcriptomics-spark", shuffle_partitions: int |
     return spark
 
 
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One parquet table of a scale-factor directory, ``<sf_dir>/<name>.parquet``."""
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
     """Load the driver-provided parquet tables as a dict of DataFrames."""
     if names is None:
@@ -61,4 +66,4 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
             "documents",
             "embeddings",
         )
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}
+    return {n: read_table(spark, sf_dir, n) for n in names}

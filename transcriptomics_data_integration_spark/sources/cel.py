@@ -103,28 +103,6 @@ def parse_cel_v4_arrays(payload: bytes) -> tuple[int, int, np.ndarray] | None:
     return ncols, nrows, cells
 
 
-def parse_cel_v4(payload: bytes) -> tuple[int, int, list[tuple]] | None:
-    """Tuple-list view of :func:`parse_cel_v4_arrays` — ``cells`` =
-    row-major ``(x, y, intensity, stdev, npixels)``.  Convenience /
-    test surface; the scan hot path (`cel_long`) stays on the numpy
-    arrays and never materializes per-cell tuples."""
-    parsed = parse_cel_v4_arrays(payload)
-    if parsed is None:
-        return None
-    ncols, nrows, cells = parsed
-    out = [
-        (
-            idx % ncols,
-            idx // ncols,
-            float(c["intensity"]),
-            float(c["stdev"]),
-            int(c["npixels"]),
-        )
-        for idx, c in enumerate(cells)
-    ]
-    return ncols, nrows, out
-
-
 def cel_long(
     df: DataFrame, id_col: str = "sample_id", payload_col: str = "payload"
 ) -> DataFrame:

@@ -16,10 +16,13 @@ to R ``p.adjust``:
     none : identity
 
 i.e. rank ascending by p, scale, then a cumulative extreme — reverse
-cummin for the step-up methods, forward cummax for holm.  Ties receive
-identical adjusted values automatically (equal p with different ranks
-collapse under the cumulative extreme).  ``min(1, .)`` commutes with
-both cummin and cummax, so clamping per-row before the window is
+cummin for the step-up methods, forward cummax for holm.  One kernel
+serves all three: ``_SCALED`` holds each method's scaled term in R's
+operand order (so the IEEE doubles match an R replay bit-for-bit), and
+the step direction picks the window order and the extreme.  Ties
+receive identical adjusted values automatically (equal p with different
+ranks collapse under the cumulative extreme).  ``min(1, .)`` commutes
+with both cummin and cummax, so clamping per-row before the window is
 bit-identical to R's post-window ``pmin(1, ...)``.
 
 The BY factor c(n) is summed as an ORDERED left fold over ascending i
@@ -31,133 +34,35 @@ permutation-dependent in the last ulp.
 Spark shape: two window functions over the same (optional partition,
 order-by-p) window — one shuffle if partitioned, single-stage on
 post-aggregate relations otherwise.  Unpartitioned calls on relations
-Catalyst can't prove small route to the bucket-partitioned histogram
-form (see ``bh_adjust_histogram``) — the billion-row scale path, shared
-by all three methods.
+Catalyst can't prove small route to the bucket-partitioned form
+(``p_adjust_histogram``) — the billion-row scale path, bit-identical to
+the window form.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.operators.windows import fits_single_task
 
-def bh_adjust_histogram(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "adj_p_value",
-    tiebreak_col: str | None = None,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Exact BH without a global sort window — the billion-row scale
-    path.  ``bh_adjust``'s unpartitioned ``orderBy(p)`` window moves the
-    whole relation to ONE task; fine for post-aggregate gene lists,
-    fatal for permutation-scale p-sets.  This variant range-buckets p
-    into ``n_buckets`` equi-width bins so every window is partitioned by
-    bucket:
+# scaled term per method as f(p, n, rank, c(n)), in R's operand order
+_SCALED = {
+    "BH": lambda p, n, rank, cn: p * n / rank,
+    "BY": lambda p, n, rank, cn: cn * n / rank * p,
+    "holm": lambda p, n, rank, cn: (n - rank + F.lit(1)) * p,
+}
+_TEMP = ("_n", "_cn", "_rank", "_scaled")
 
-    1. histogram pass: per-bucket counts -> cumulative base rank per
-       bucket + total n (a <= n_buckets-row relation, broadcast back);
-    2. rank pass: global rank = bucket base + row_number within bucket
-       (exact, because buckets are value ranges: every p in bucket k
-       sorts before every p in bucket k+1, and ties share a bucket);
-    3. reverse cumulative min = min(within-bucket reverse cummin,
-       suffix-min of higher buckets) — the suffix-min is again computed
-       on the tiny per-bucket relation and broadcast.
 
-    Identical output to ``bh_adjust`` (same ``p * n / rank`` expression,
-    same tie semantics); the only unpartitioned windows run on
-    ``n_buckets`` rows regardless of |df|.  Under a uniform-ish p
-    distribution each bucket holds |df|/n_buckets rows; AQE skew-split
-    covers spiky nulls at p≈0.
-    """
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    rev = [F.col(p_col).desc()] + (
-        [F.col(tiebreak_col).desc()] if tiebreak_col else []
-    )
-    with_b = df.withColumn(
-        "_bkt",
-        F.least(
-            F.floor(F.col(p_col) * n_buckets).cast("int"), F.lit(n_buckets - 1)
-        ),
-    )
-    hist = with_b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
-    w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    cum = (
-        hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
-        .withColumn("_n", F.sum("_cnt").over(Window.partitionBy()))
-        .select("_bkt", "_base", "_n")
-    )
-    w_in = Window.partitionBy("_bkt").orderBy(*order)
-    ranked = (
-        with_b.join(F.broadcast(cum), "_bkt")
-        .withColumn("_rank", F.col("_base") + F.row_number().over(w_in))
-        .withColumn(
-            "_scaled",
-            F.least(F.col(p_col) * F.col("_n") / F.col("_rank"), F.lit(1.0)),
+def _method(method: str) -> str:
+    method = "BH" if method == "fdr" else method
+    if method not in _SCALED:
+        raise ValueError(
+            f"unknown p-adjust method {method!r}; expected one of "
+            "'none', 'BH', 'fdr', 'BY', 'holm'"
         )
-    )
-    bmin = ranked.groupBy("_bkt").agg(F.min("_scaled").alias("_bmin"))
-    w_suf = Window.orderBy(F.col("_bkt").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    suf = bmin.withColumn("_sufmin", F.min("_bmin").over(w_suf)).select(
-        "_bkt", "_sufmin"
-    )
-    w_rev_in = Window.partitionBy("_bkt").orderBy(*rev).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    # least() ignores nulls, so the highest bucket (null suffix) falls
-    # back to its within-bucket reverse cummin alone
-    return (
-        ranked.join(F.broadcast(suf), "_bkt")
-        .withColumn("_revmin", F.min("_scaled").over(w_rev_in))
-        .withColumn(out_col, F.least(F.col("_revmin"), F.col("_sufmin")))
-        .drop("_bkt", "_base", "_n", "_rank", "_scaled", "_revmin", "_sufmin")
-    )
-
-
-def bh_adjust(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "adj_p_value",
-    partition_cols: list[str] | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    parts = partition_cols or []
-    if not parts:
-        # adaptive scale guard: an unpartitioned sort window on a
-        # relation Catalyst can't prove single-task-small funnels the
-        # whole p-set through one task — route it to the bit-identical
-        # bucket-partitioned histogram form instead (p in [0,1] by BH's
-        # contract, so the equi-width bucketing needs no bounds pass)
-        from transcriptomics_data_integration_spark.operators.windows import (
-            fits_single_task,
-        )
-
-        if not fits_single_task(df):
-            return bh_adjust_histogram(
-                df, p_col, out_col=out_col, tiebreak_col=tiebreak_col
-            )
-    order = [F.col(p_col).asc()]
-    if tiebreak_col:
-        order.append(F.col(tiebreak_col).asc())
-    w_rank = Window.partitionBy(*parts).orderBy(*order)
-    w_rev = (
-        Window.partitionBy(*parts)
-        .orderBy(*[c.desc() for c in [F.col(p_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy(*parts)
-    return (
-        df.withColumn("_rank", F.row_number().over(w_rank))
-        .withColumn("_n", F.count(F.lit(1)).over(w_all))
-        .withColumn("_scaled", F.least(F.col(p_col) * F.col("_n") / F.col("_rank"), F.lit(1.0)))
-        .withColumn(out_col, F.min("_scaled").over(w_rev))
-        .drop("_rank", "_n", "_scaled")
-    )
+    return method
 
 
 def _harmonic(n_col: str, chunk: int = 1_000_000):
@@ -185,85 +90,99 @@ def _harmonic(n_col: str, chunk: int = 1_000_000):
     )
 
 
-def by_adjust(
+def _scaled(method: str, p_col: str) -> Column:
+    term = _SCALED[method](F.col(p_col), F.col("_n"), F.col("_rank"), F.col("_cn"))
+    return F.least(term, F.lit(1.0))
+
+
+def _orders(p_col: str, tiebreak_col: str | None, step_down: bool):
+    """(rank order, cumulative-extreme order): ascending p for the rank;
+    the extreme runs forward (holm's cummax) or in reverse (BH/BY's
+    cummin)."""
+    keys = [F.col(p_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
+    order = [c.asc() for c in keys]
+    return order, order if step_down else [c.desc() for c in keys]
+
+
+def _p_adjust_window(
     df: DataFrame,
     p_col: str,
-    out_col: str = "adj_p_value",
-    partition_cols: list[str] | None = None,
-    tiebreak_col: str | None = None,
+    out_col: str,
+    method: str,
+    parts: list[str],
+    tiebreak_col: str | None,
 ) -> DataFrame:
-    """R ``p.adjust(method="BY")``: BH's step-up reverse cummin with
-    the scaled term ``(c(n) * n / rank) * p`` — R's exact operand
-    order (``q * n/i * p[o]``), kept so the IEEE doubles match an R
-    replay bit-for-bit.  The per-partition (n, c(n)) pair is computed
-    on a one-row-per-group aggregate and broadcast back, so the O(n)
-    harmonic fold runs once per group, not once per row."""
-    parts = partition_cols or []
-    if not parts:
-        from transcriptomics_data_integration_spark.operators.windows import (
-            fits_single_task,
-        )
-
-        if not fits_single_task(df):
-            return by_adjust_histogram(
-                df, p_col, out_col=out_col, tiebreak_col=tiebreak_col
-            )
-    counts = (
-        df.groupBy(*parts)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .withColumn("_cn", _harmonic("_n"))
-    )
-    joined = (
-        df.join(F.broadcast(counts), parts)
-        if parts
-        else df.crossJoin(F.broadcast(counts))
-    )
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    rev = [F.col(p_col).desc()] + (
-        [F.col(tiebreak_col).desc()] if tiebreak_col else []
-    )
+    step_down = method == "holm"
+    order, cum_order = _orders(p_col, tiebreak_col, step_down)
     w_rank = Window.partitionBy(*parts).orderBy(*order)
-    w_rev = (
+    w_cum = (
         Window.partitionBy(*parts)
-        .orderBy(*rev)
+        .orderBy(*cum_order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        joined.withColumn("_rank", F.row_number().over(w_rank))
-        .withColumn(
-            "_scaled",
-            F.least(
-                F.col("_cn") * F.col("_n") / F.col("_rank") * F.col(p_col),
-                F.lit(1.0),
-            ),
+    if method == "BY":
+        # per-partition (n, c(n)) on a one-row-per-group aggregate,
+        # broadcast back: the O(n) harmonic fold runs once per group
+        counts = (
+            df.groupBy(*parts)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .withColumn("_cn", _harmonic("_n"))
         )
-        .withColumn(out_col, F.min("_scaled").over(w_rev))
-        .drop("_rank", "_n", "_cn", "_scaled")
+        joined = (
+            df.join(F.broadcast(counts), parts)
+            if parts
+            else df.crossJoin(F.broadcast(counts))
+        )
+        ranked = joined.withColumn("_rank", F.row_number().over(w_rank))
+    else:
+        ranked = df.withColumn("_rank", F.row_number().over(w_rank)).withColumn(
+            "_n", F.count(F.lit(1)).over(Window.partitionBy(*parts))
+        )
+    ext = F.max if step_down else F.min
+    return (
+        ranked.withColumn("_scaled", _scaled(method, p_col))
+        .withColumn(out_col, ext("_scaled").over(w_cum))
+        .drop(*_TEMP)
     )
 
 
-def by_adjust_histogram(
+def p_adjust_histogram(
     df: DataFrame,
     p_col: str,
     out_col: str = "adj_p_value",
+    method: str = "BH",
     tiebreak_col: str | None = None,
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """BY via the same bucket-partitioned two-pass shape as
-    ``bh_adjust_histogram`` (the billion-row scale path): the only
-    deltas are the c(n) factor — computed ONCE on a one-row total
-    aggregated from the histogram and broadcast into the cumulative
-    relation (the chunked ``_harmonic`` fold evaluates exactly once,
-    not once per bucket row) — and the R operand order in the scaled
-    term.  Bit-identical to ``by_adjust``."""
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    rev = [F.col(p_col).desc()] + (
-        [F.col(tiebreak_col).desc()] if tiebreak_col else []
-    )
+    """Exact p-adjust without a global sort window — the billion-row
+    scale path.  The unpartitioned ``orderBy(p)`` window moves the whole
+    relation to ONE task; fine for post-aggregate gene lists, fatal for
+    permutation-scale p-sets.  This form range-buckets p into
+    ``n_buckets`` equi-width bins so every window is partitioned by
+    bucket:
+
+    1. histogram pass: per-bucket counts -> cumulative base rank per
+       bucket + total n (a <= n_buckets-row relation, broadcast back;
+       BY's c(n) is folded ONCE on a one-row total, not per bucket);
+    2. rank pass: global rank = bucket base + row_number within bucket
+       (exact, because buckets are value ranges: every p in bucket k
+       sorts before every p in bucket k+1, and ties share a bucket);
+    3. cumulative extreme = combine(within-bucket cumulative extreme,
+       extreme over the buckets before it in step order) — suffix-min
+       of HIGHER buckets for BH/BY, prefix-max of LOWER buckets for
+       holm, again computed on the tiny per-bucket relation and
+       broadcast.  ``least``/``greatest`` ignore the null edge of the
+       first bucket in step order.
+
+    Same scaled term and tie semantics as the window form, so the
+    output is bit-identical; the only unpartitioned windows run on
+    ``n_buckets`` rows regardless of |df|.  Under a uniform-ish p
+    distribution each bucket holds |df|/n_buckets rows; AQE skew-split
+    covers spiky nulls at p≈0.
+    """
+    method = _method(method)
+    step_down = method == "holm"
+    order, cum_order = _orders(p_col, tiebreak_col, step_down)
     with_b = df.withColumn(
         "_bkt",
         F.least(
@@ -272,149 +191,47 @@ def by_adjust_histogram(
     )
     hist = with_b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
     w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    totals = hist.agg(F.sum("_cnt").alias("_n")).withColumn(
-        "_cn", _harmonic("_n")
+    based = hist.withColumn(
+        "_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0))
     )
-    cum = (
-        hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
-        .crossJoin(F.broadcast(totals))
-        .select("_bkt", "_base", "_n", "_cn")
-    )
+    if method == "BY":
+        totals = hist.agg(F.sum("_cnt").alias("_n")).withColumn(
+            "_cn", _harmonic("_n")
+        )
+        cum = based.crossJoin(F.broadcast(totals)).select(
+            "_bkt", "_base", "_n", "_cn"
+        )
+    else:
+        cum = based.withColumn(
+            "_n", F.sum("_cnt").over(Window.partitionBy())
+        ).select("_bkt", "_base", "_n")
     w_in = Window.partitionBy("_bkt").orderBy(*order)
     ranked = (
         with_b.join(F.broadcast(cum), "_bkt")
         .withColumn("_rank", F.col("_base") + F.row_number().over(w_in))
-        .withColumn(
-            "_scaled",
-            F.least(
-                F.col("_cn") * F.col("_n") / F.col("_rank") * F.col(p_col),
-                F.lit(1.0),
-            ),
-        )
+        .withColumn("_scaled", _scaled(method, p_col))
     )
-    bmin = ranked.groupBy("_bkt").agg(F.min("_scaled").alias("_bmin"))
-    w_suf = Window.orderBy(F.col("_bkt").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
+    if step_down:
+        ext, combine, bkt_order = F.max, F.greatest, F.col("_bkt").asc()
+        per_bkt, edge, cum_in = "_bmax", "_premax", "_fwdmax"
+    else:
+        ext, combine, bkt_order = F.min, F.least, F.col("_bkt").desc()
+        per_bkt, edge, cum_in = "_bmin", "_sufmin", "_revmin"
+    w_edge = Window.orderBy(bkt_order).rowsBetween(Window.unboundedPreceding, -1)
+    edges = (
+        ranked.groupBy("_bkt")
+        .agg(ext("_scaled").alias(per_bkt))
+        .withColumn(edge, ext(per_bkt).over(w_edge))
+        .select("_bkt", edge)
     )
-    suf = bmin.withColumn("_sufmin", F.min("_bmin").over(w_suf)).select(
-        "_bkt", "_sufmin"
-    )
-    w_rev_in = Window.partitionBy("_bkt").orderBy(*rev).rowsBetween(
+    w_cum_in = Window.partitionBy("_bkt").orderBy(*cum_order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return (
-        ranked.join(F.broadcast(suf), "_bkt")
-        .withColumn("_revmin", F.min("_scaled").over(w_rev_in))
-        .withColumn(out_col, F.least(F.col("_revmin"), F.col("_sufmin")))
-        .drop("_bkt", "_base", "_n", "_cn", "_rank", "_scaled", "_revmin", "_sufmin")
-    )
-
-
-def holm_adjust(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "adj_p_value",
-    partition_cols: list[str] | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """R ``p.adjust(method="holm")``: step-DOWN FWER control —
-    ``adj_i = max_{j <= i} min(1, (n - j + 1) * p_(j))``, i.e. a
-    FORWARD cumulative max over ascending p (the mirror of BH's
-    reverse cummin).  Tied p values collapse to one adjusted value
-    under the cummax exactly as in R.  Same window shape and the same
-    adaptive histogram fallback as ``bh_adjust``."""
-    parts = partition_cols or []
-    if not parts:
-        from transcriptomics_data_integration_spark.operators.windows import (
-            fits_single_task,
-        )
-
-        if not fits_single_task(df):
-            return holm_adjust_histogram(
-                df, p_col, out_col=out_col, tiebreak_col=tiebreak_col
-            )
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    w_rank = Window.partitionBy(*parts).orderBy(*order)
-    w_fwd = (
-        Window.partitionBy(*parts)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy(*parts)
-    return (
-        df.withColumn("_rank", F.row_number().over(w_rank))
-        .withColumn("_n", F.count(F.lit(1)).over(w_all))
-        .withColumn(
-            "_scaled",
-            F.least(
-                (F.col("_n") - F.col("_rank") + F.lit(1)) * F.col(p_col),
-                F.lit(1.0),
-            ),
-        )
-        .withColumn(out_col, F.max("_scaled").over(w_fwd))
-        .drop("_rank", "_n", "_scaled")
-    )
-
-
-def holm_adjust_histogram(
-    df: DataFrame,
-    p_col: str,
-    out_col: str = "adj_p_value",
-    tiebreak_col: str | None = None,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Holm via the bucket-partitioned shape: global rank = bucket
-    base + within-bucket row_number (exact, buckets are value ranges),
-    forward cummax = max(within-bucket forward cummax, prefix-max of
-    LOWER buckets) — the mirror image of ``bh_adjust_histogram``'s
-    suffix-min.  ``greatest`` ignores the null prefix of bucket 0 the
-    same way ``least`` ignores the null suffix of the top bucket.
-    Bit-identical to ``holm_adjust``."""
-    order = [F.col(p_col).asc()] + (
-        [F.col(tiebreak_col).asc()] if tiebreak_col else []
-    )
-    with_b = df.withColumn(
-        "_bkt",
-        F.least(
-            F.floor(F.col(p_col) * n_buckets).cast("int"), F.lit(n_buckets - 1)
-        ),
-    )
-    hist = with_b.groupBy("_bkt").agg(F.count(F.lit(1)).alias("_cnt"))
-    w_base = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    cum = (
-        hist.withColumn("_base", F.coalesce(F.sum("_cnt").over(w_base), F.lit(0)))
-        .withColumn("_n", F.sum("_cnt").over(Window.partitionBy()))
-        .select("_bkt", "_base", "_n")
-    )
-    w_in = Window.partitionBy("_bkt").orderBy(*order)
-    ranked = (
-        with_b.join(F.broadcast(cum), "_bkt")
-        .withColumn("_rank", F.col("_base") + F.row_number().over(w_in))
-        .withColumn(
-            "_scaled",
-            F.least(
-                (F.col("_n") - F.col("_rank") + F.lit(1)) * F.col(p_col),
-                F.lit(1.0),
-            ),
-        )
-    )
-    bmax = ranked.groupBy("_bkt").agg(F.max("_scaled").alias("_bmax"))
-    w_pre = Window.orderBy(F.col("_bkt").asc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    pre = bmax.withColumn("_premax", F.max("_bmax").over(w_pre)).select(
-        "_bkt", "_premax"
-    )
-    w_fwd_in = Window.partitionBy("_bkt").orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        ranked.join(F.broadcast(pre), "_bkt")
-        .withColumn("_fwdmax", F.max("_scaled").over(w_fwd_in))
-        .withColumn(out_col, F.greatest(F.col("_fwdmax"), F.col("_premax")))
-        .drop("_bkt", "_base", "_n", "_rank", "_scaled", "_fwdmax", "_premax")
+        ranked.join(F.broadcast(edges), "_bkt")
+        .withColumn(cum_in, ext("_scaled").over(w_cum_in))
+        .withColumn(out_col, combine(F.col(cum_in), F.col(edge)))
+        .drop("_bkt", "_base", *_TEMP, cum_in, edge)
     )
 
 
@@ -427,27 +244,19 @@ def p_adjust(
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """The reference DE scripts' full ``adjust`` argument surface
-    (`DiffExpression_closedPlatform.R:24`): dispatch to the matching
-    R ``p.adjust`` method.  ``fdr`` is R's own alias of BH; ``none``
-    passes p through unchanged (R returns p itself)."""
-    if method in ("BH", "fdr"):
-        return bh_adjust(
-            df, p_col, out_col,
-            partition_cols=partition_cols, tiebreak_col=tiebreak_col,
-        )
-    if method == "BY":
-        return by_adjust(
-            df, p_col, out_col,
-            partition_cols=partition_cols, tiebreak_col=tiebreak_col,
-        )
-    if method == "holm":
-        return holm_adjust(
-            df, p_col, out_col,
-            partition_cols=partition_cols, tiebreak_col=tiebreak_col,
-        )
+    (`DiffExpression_closedPlatform.R:24`): R ``p.adjust`` by
+    ``method``.  ``fdr`` is R's own alias of BH; ``none`` passes p
+    through unchanged (R returns p itself).
+
+    Adaptive scale guard: an unpartitioned sort window on a relation
+    Catalyst can't prove single-task-small funnels the whole p-set
+    through one task, so it routes to the bit-identical
+    :func:`p_adjust_histogram` instead (p in [0,1] by contract, so the
+    equi-width bucketing needs no bounds pass)."""
     if method == "none":
         return df.withColumn(out_col, F.col(p_col))
-    raise ValueError(
-        f"unknown p-adjust method {method!r}; expected one of "
-        "'none', 'BH', 'fdr', 'BY', 'holm'"
-    )
+    method = _method(method)
+    parts = partition_cols or []
+    if not parts and not fits_single_task(df):
+        return p_adjust_histogram(df, p_col, out_col, method, tiebreak_col=tiebreak_col)
+    return _p_adjust_window(df, p_col, out_col, method, parts, tiebreak_col)

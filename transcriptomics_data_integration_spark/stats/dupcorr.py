@@ -116,27 +116,15 @@ def per_gene_block_icc(
 
 
 def consensus_correlation(icc_df: DataFrame) -> DataFrame:
-    """Fisher-z consensus over genes: tanh(mean(atanh(clamped icc))).
-    One-row result (the scalar limma feeds into lmFit)."""
-    z = F.expr(
-        f"0.5e0 * ln((1.0e0 + least(greatest(icc, -{_CLAMP}), {_CLAMP})) "
-        f"/ (1.0e0 - least(greatest(icc, -{_CLAMP}), {_CLAMP})))"
-    )
-    agg = icc_df.agg(
-        F.count(F.lit(1)).alias("n_genes"), F.avg(z).alias("_zbar")
-    )
-    tanh = "(exp(2.0e0 * _zbar) - 1.0e0) / (exp(2.0e0 * _zbar) + 1.0e0)"
-    return agg.withColumn("consensus_corr", F.expr(tanh)).drop("_zbar")
-
-
-def consensus_correlation_exact(icc_df: DataFrame) -> DataFrame:
-    """Fisher-z consensus with ORDER-FREE accumulation: each gene's
-    atanh(clamped icc) is quantized to 1e-12 units (a deterministic
-    scalar function of the gene's exact-path icc) and summed in
-    DECIMAL, so the consensus scalar is bit-identical across engines
-    and partitionings — the property :func:`blocked_gls_ttest` needs,
-    because the consensus feeds every downstream block weight and a
-    last-ulp drift there would fan out into every per-gene statistic.
+    """Fisher-z consensus over genes, tanh(mean(atanh(clamped icc))) —
+    the one-row scalar limma feeds into lmFit — with ORDER-FREE
+    accumulation: each gene's atanh(clamped icc) is quantized to 1e-12
+    units (a deterministic scalar function of the gene's exact-path
+    icc) and summed in DECIMAL, so the consensus scalar is
+    bit-identical across engines and partitionings — the property
+    :func:`blocked_gls_ttest` needs, because the consensus feeds every
+    downstream block weight and a last-ulp drift there would fan out
+    into every per-gene statistic.
     Quantization bias is <= 1e-12 per gene on the z scale (~1e-12 on
     rho) — far below the estimator's sampling noise."""
     z = F.expr(
@@ -196,7 +184,7 @@ def blocked_gls_ttest(
     silently loses under the unblocked fit.
 
     ``rho``: a float, a one-row DataFrame carrying ``consensus_corr``
-    (:func:`consensus_correlation_exact` output, broadcast into the
+    (:func:`consensus_correlation` output, broadcast into the
     plan — no driver collect), or None to estimate it from ``df``
     in-plan via :func:`per_gene_block_icc` + the exact consensus.
 
@@ -219,7 +207,7 @@ def blocked_gls_ttest(
             value_col,
             exact_scale=exact_scale,
         )
-        rho = consensus_correlation_exact(icc)
+        rho = consensus_correlation(icc)
     if isinstance(rho, DataFrame):
         rho_rel = rho.select(F.col("consensus_corr").alias("_rho"))
     else:

@@ -21,12 +21,18 @@ the last ulp.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import (
+    dec,
+    dsum,
+    dsum2,
+    dsum2_sql,
+    dsum_sql,
+)
 from transcriptomics_data_integration_spark.functions.normal import norm_ppf_sql, two_sided_p_sql
 from transcriptomics_data_integration_spark.operators import (
     argmax_dedup,
@@ -42,45 +48,17 @@ from transcriptomics_data_integration_spark.operators.filters import (
     low_value_floor,
     zero_repair,
 )
+from transcriptomics_data_integration_spark.session import read_table
 from transcriptomics_data_integration_spark.stats import (
-    bh_adjust,
-    bh_adjust_histogram,
-    by_adjust,
-    holm_adjust,
     fem_rem_effects,
+    p_adjust,
+    p_adjust_histogram,
     quantile_normalize,
     stouffer_combine,
     two_group_ttest,
 )
 from transcriptomics_data_integration_spark.stats.genemeta import effect_sizes
 from transcriptomics_data_integration_spark.suite_llm import ORACLES_LLM, QUERIES_LLM
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _dec(col, scale: int = 2):
-    return col.cast(f"decimal(18,{scale})")
-
-
-def _dsum(col, scale: int = 2):
-    """Exact SUM via decimal accumulation, back to double."""
-    return F.sum(_dec(col, scale)).cast("double")
-
-
-def _dsum2(col, scale: int = 2):
-    c = _dec(col, scale)
-    return F.sum((c * c).cast(f"decimal(38,{2 * scale})")).cast("double")
-
-
-def _dsum_sql(expr: str, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-
-
-def _dsum2_sql(expr: str, scale: int = 2) -> str:
-    c = f"CAST({expr} AS DECIMAL(18,{scale}))"
-    return f"CAST(SUM(CAST({c} * {c} AS DECIMAL(38,{2 * scale}))) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------------
@@ -93,19 +71,19 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exercises S1-style scan -> filter -> partial+final hash aggregation.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = _dec(F.col("l_extendedprice")) * (
-        F.lit(1).cast("decimal(18,2)") - _dec(F.col("l_discount"))
+    li = read_table(spark, sf_dir, "lineitem")
+    disc_price = dec(F.col("l_extendedprice")) * (
+        F.lit(1).cast("decimal(18,2)") - dec(F.col("l_discount"))
     )
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum("l_quantity").alias("sum_qty"),
-            _dsum(F.col("l_extendedprice")).alias("sum_base_price"),
+            dsum(F.col("l_extendedprice")).alias("sum_base_price"),
             F.sum(disc_price.cast("decimal(38,4)")).cast("double").alias("sum_disc_price"),
             (F.sum("l_quantity") / F.count(F.lit(1))).alias("avg_qty"),
-            (_dsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("avg_price"),
+            (dsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("avg_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )
@@ -114,12 +92,12 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_PRICING = f"""
 SELECT l_returnflag, l_linestatus,
        SUM(l_quantity) AS sum_qty,
-       {_dsum_sql('l_extendedprice')} AS sum_base_price,
+       {dsum_sql('l_extendedprice')} AS sum_base_price,
        CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
                      * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
                 AS DECIMAL(38,4))) AS DOUBLE) AS sum_disc_price,
        SUM(l_quantity) / COUNT(*) AS avg_qty,
-       {_dsum_sql('l_extendedprice')} / COUNT(*) AS avg_price,
+       {dsum_sql('l_extendedprice')} / COUNT(*) AS avg_price,
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -130,10 +108,10 @@ GROUP BY l_returnflag, l_linestatus
 def q_gene_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2 — per-gene mean/sd/count (gene ~ l_partkey) with
     decimal-exact moments (`MultiGene2ProbeFilter.R:31`)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_partkey").agg(
-        _dsum(F.col("l_extendedprice")).alias("_s"),
-        _dsum2(F.col("l_extendedprice")).alias("_s2"),
+        dsum(F.col("l_extendedprice")).alias("_s"),
+        dsum2(F.col("l_extendedprice")).alias("_s2"),
         F.count("l_extendedprice").alias("n_obs"),
     )
     return agg.select(
@@ -150,8 +128,8 @@ def q_gene_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_GENE_STATS = f"""
 WITH agg AS (
   SELECT l_partkey,
-         {_dsum_sql('l_extendedprice')} AS s,
-         {_dsum2_sql('l_extendedprice')} AS s2,
+         {dsum_sql('l_extendedprice')} AS s,
+         {dsum2_sql('l_extendedprice')} AS s2,
          COUNT(l_extendedprice) AS n_obs
   FROM lineitem GROUP BY l_partkey
 )
@@ -166,7 +144,7 @@ FROM agg
 def q_library_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — per-sample library size (sample ~ l_suppkey); quantities are
     integer-valued so the double sum is exact in any order."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = library_size(li, "l_suppkey", "l_quantity")
     return out.select("l_suppkey", "lib_size")
 
@@ -179,19 +157,19 @@ FROM lineitem GROUP BY l_suppkey
 
 def q_gene_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 — anti-join exclusion list (drop large parts), summarized."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     excl = part.where(F.col("p_size") > 45).select(F.col("p_partkey").alias("l_partkey"))
     kept = exclude_ids(li, excl, "l_partkey")
     return kept.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        _dsum(F.col("l_extendedprice")).alias("sum_price"),
+        dsum(F.col("l_extendedprice")).alias("sum_price"),
     )
 
 
 ORACLE_GENE_EXCLUSION = f"""
 SELECT l_returnflag, COUNT(*) AS n_rows,
-       {_dsum_sql('l_extendedprice')} AS sum_price
+       {dsum_sql('l_extendedprice')} AS sum_price
 FROM lineitem
 WHERE l_partkey NOT IN (SELECT p_partkey FROM part WHERE p_size > 45)
 GROUP BY l_returnflag
@@ -205,8 +183,8 @@ def q_outlier_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     "outlier samples" of their region), mirroring ``outliers_<study>.txt``
     (`QC_Affy_U133Plus2.R:162-164`).
     """
-    nation = _t(spark, sf_dir, "nation")
-    customer = _t(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
+    customer = read_table(spark, sf_dir, "customer")
     packed = (
         nation.where(F.col("n_nationkey") % 2 == 0)
         .groupBy("n_regionkey")
@@ -219,7 +197,7 @@ def q_outlier_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = remove_outlier_samples(cust, packed, "samples2exclude", "n_name")
     return kept.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_customers"),
-        _dsum(F.col("c_acctbal")).alias("sum_acctbal"),
+        dsum(F.col("c_acctbal")).alias("sum_acctbal"),
     )
 
 
@@ -231,7 +209,7 @@ WITH packed AS (
   SELECT DISTINCT TRIM(UNNEST(STRING_SPLIT(samples2exclude, ','))) AS n_name FROM packed
 )
 SELECT c_mktsegment, COUNT(*) AS n_customers,
-       {_dsum_sql('c_acctbal')} AS sum_acctbal
+       {dsum_sql('c_acctbal')} AS sum_acctbal
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 WHERE n_name NOT IN (SELECT n_name FROM excl)
 GROUP BY c_mktsegment
@@ -245,13 +223,13 @@ def q_zero_variance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep/drop decision is identical on both engines even for
     all-equal-value groups (`DiffExpression_closedPlatform.R:375-376`).
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     var = (F.col("_s2") - F.col("_s") * F.col("_s") / F.col("_n")) / (F.col("_n") - 1)
     keep = (
         li.groupBy("l_partkey")
         .agg(
-            _dsum(F.col("l_tax")).alias("_s"),
-            _dsum2(F.col("l_tax")).alias("_s2"),
+            dsum(F.col("l_tax")).alias("_s"),
+            dsum2(F.col("l_tax")).alias("_s2"),
             F.count(F.lit(1)).alias("_n"),
         )
         .where(F.col("_n") >= 2)
@@ -268,8 +246,8 @@ def q_zero_variance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_ZERO_VARIANCE = f"""
 WITH agg AS (
   SELECT l_partkey,
-         {_dsum_sql('l_tax')} AS s,
-         {_dsum2_sql('l_tax')} AS s2,
+         {dsum_sql('l_tax')} AS s,
+         {dsum2_sql('l_tax')} AS s2,
          COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey
 ), keep AS (
@@ -284,11 +262,11 @@ FROM lineitem WHERE l_partkey IN (SELECT l_partkey FROM keep)
 def q_nonspecific_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5/W1 — keep top-200 genes by (decimal-exact) sd, summarize the
     surviving rows (`DiffExpression_closedPlatform.R:443-450`)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     var = (F.col("_s2") - F.col("_s") * F.col("_s") / F.col("_n")) / (F.col("_n") - 1)
     sd = li.groupBy("l_partkey").agg(
-        _dsum(F.col("l_extendedprice")).alias("_s"),
-        _dsum2(F.col("l_extendedprice")).alias("_s2"),
+        dsum(F.col("l_extendedprice")).alias("_s"),
+        dsum2(F.col("l_extendedprice")).alias("_s2"),
         F.count(F.lit(1)).alias("_n"),
     ).where(F.col("_n") >= 2).withColumn("_sd", F.sqrt(var))
     w = Window.orderBy(F.col("_sd").desc(), F.col("l_partkey"))
@@ -303,8 +281,8 @@ def q_nonspecific_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_NONSPECIFIC = f"""
 WITH agg AS (
   SELECT l_partkey,
-         {_dsum_sql('l_extendedprice')} AS s,
-         {_dsum2_sql('l_extendedprice')} AS s2,
+         {dsum_sql('l_extendedprice')} AS s,
+         {dsum2_sql('l_extendedprice')} AS s2,
          COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey
 ), sd AS (
@@ -323,7 +301,7 @@ def q_reliability_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 — probeset reliability: per order, count "unreliable" lines
     (discount > 0.05 or tax > 0.05), require <= 2 and a single
     returnflag (~ single mapped gene) (`ProbeFilter.pl:99-160`)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     pred = (F.col("l_discount") > 0.05) | (F.col("l_tax") > 0.05)
     out = reliability_filter(li, "l_orderkey", pred, "l_returnflag", 2)
     return out.select("l_orderkey", "n_unreliable", "n_genes", "n_members")
@@ -353,7 +331,7 @@ def q_dabg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 2-groups transcript rule, and the final row filter verbatim."""
     from transcriptomics_data_integration_spark.operators.filters import dabg_filter
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     cell = (
         li.select(
             (F.col("l_partkey") % 500).alias("probeset_id"),
@@ -427,11 +405,11 @@ def q_value_conditioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-supplier minimum non-zero discount (F11,
     `GenExpressionComb_Illum_HT_12_V3.R:57-67`).
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     floored = low_value_floor(li, "l_discount", 0.02, 0.0)
     repaired = zero_repair(floored, "l_suppkey", "l_discount")
     return repaired.groupBy("l_suppkey").agg(
-        _dsum(F.col("l_discount")).alias("sum_discount"),
+        dsum(F.col("l_discount")).alias("sum_discount"),
         F.count(F.when(F.col("l_discount") == 0, 1)).alias("n_zero"),
     )
 
@@ -447,7 +425,7 @@ WITH floored AS (
               ELSE d END AS d
   FROM floored
 )
-SELECT l_suppkey, {_dsum_sql('d')} AS sum_discount,
+SELECT l_suppkey, {dsum_sql('d')} AS sum_discount,
        COUNT(CASE WHEN d = 0 THEN 1 END) AS n_zero
 FROM repaired GROUP BY l_suppkey
 """
@@ -459,8 +437,8 @@ def q_merge_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Build side: customers in the BUILDING segment only, so non-matches
     exercise the NA-padding path (`MergeFiles.pl:113`).
     """
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     joined = orders.join(
         F.broadcast(customer),
         orders.o_custkey == customer.c_custkey,
@@ -486,8 +464,8 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-nested-loop theta join into a hash join (SURVEY.md
     section 4.4).
     """
-    part = _t(spark, sf_dir, "part")
-    customer = _t(spark, sf_dir, "customer")
+    part = read_table(spark, sf_dir, "part")
+    customer = read_table(spark, sf_dir, "customer")
     probes = part.select(
         F.col("p_partkey").alias("probe_id"),
         (F.col("p_partkey") % 23).cast("string").alias("chrom"),
@@ -565,14 +543,14 @@ WHERE r.rn = 1
 def q_argmax_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/W2 — one-probe-one-gene collapse: per brand keep the part with
     the max (decimal-exact) price variance (`MultiGene2ProbeFilter.R:50-64`)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     var = (F.col("_s") * F.col("_s") / F.col("_n") - F.col("_s2")) * -1
     var_per_part = (
         li.groupBy("l_partkey")
         .agg(
-            _dsum(F.col("l_extendedprice")).alias("_s"),
-            _dsum2(F.col("l_extendedprice")).alias("_s2"),
+            dsum(F.col("l_extendedprice")).alias("_s"),
+            dsum2(F.col("l_extendedprice")).alias("_s2"),
             F.count(F.lit(1)).alias("_n"),
         )
         .where(F.col("_n") >= 2)
@@ -593,8 +571,8 @@ def q_argmax_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_ARGMAX_DEDUP = f"""
 WITH agg AS (
   SELECT l_partkey,
-         {_dsum_sql('l_extendedprice')} AS s,
-         {_dsum2_sql('l_extendedprice')} AS s2,
+         {dsum_sql('l_extendedprice')} AS s,
+         {dsum2_sql('l_extendedprice')} AS s2,
          COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey
 ), v AS (
@@ -613,7 +591,7 @@ FROM a WHERE rn = 1
 def q_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 — deterministic dropDuplicates: first order per customer
     (`Meta_analysis.R:201,211` !duplicated)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     first = argmax_dedup(
         orders.withColumn("_neg", -F.col("o_orderkey")), "o_custkey", "_neg", "o_orderkey"
     )
@@ -629,7 +607,7 @@ FROM orders GROUP BY o_custkey
 def q_set_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 — union/intersect/setdiff cardinalities of two gene sets
     (parts shipped 1995-H1 vs 1995-H2) (`Meta_analysis.R:1060-1066`)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     a = li.where(
         (F.col("l_shipdate") >= "1995-01-01") & (F.col("l_shipdate") < "1995-07-01")
     ).select(F.col("l_partkey").alias("k"))
@@ -660,7 +638,7 @@ FROM f
 
 def q_frequency_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 — histogram of lines-per-order (`ProbeFilter.pl:166-216`)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return frequency_table(li, "l_orderkey")
 
 
@@ -675,7 +653,7 @@ SELECT group_size, COUNT(*) AS n_groups FROM sizes GROUP BY group_size
 def q_venn_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 — k-set Venn counts via membership bitmask
     (`overLapper.R:52-79`): parts x the set of return flags seen."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return bitmask_venn(li, "l_partkey", "l_returnflag")
 
 
@@ -691,7 +669,7 @@ SELECT membership, COUNT(*) AS n_elements FROM m GROUP BY membership
 def q_quantile_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 — exact percentiles of order totals
     (`Meta_analysis.R:1360-1368` top/bottom deciles)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     qs = [0.1, 0.25, 0.5, 0.75, 0.9]
     agg = orders.agg(F.percentile("o_totalprice", F.lit(qs)).alias("_p"))
     return agg.select(F.posexplode("_p").alias("pos", "threshold")).select(
@@ -712,9 +690,9 @@ SELECT pos, ROUND(threshold, 4) AS threshold FROM q
 def q_sample_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11 — per-sample Pearson correlation of price vs quantity from
     decimal-exact cross-moments (`Study_effect.R:320-398`)."""
-    li = _t(spark, sf_dir, "lineitem")
-    x = _dec(F.col("l_extendedprice"), 2)
-    y = _dec(F.col("l_quantity"), 0)
+    li = read_table(spark, sf_dir, "lineitem")
+    x = dec(F.col("l_extendedprice"), 2)
+    y = dec(F.col("l_quantity"), 0)
     agg = li.groupBy("l_suppkey").agg(
         F.sum(x).cast("double").alias("sx"),
         F.sum(y).cast("double").alias("sy"),
@@ -753,13 +731,13 @@ def q_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1/W6 — quantile normalization of the (sample ~ supplier) value
     distributions (`GenExpressionComb_Affy_U133Plus2.R:149-156`).  The
     reference distribution (mean per rank) uses decimal-exact sums."""
-    li = _t(spark, sf_dir, "lineitem").withColumn(
+    li = read_table(spark, sf_dir, "lineitem").withColumn(
         "row_id", F.col("l_orderkey") * 10 + F.col("l_linenumber")
     )
     w = Window.partitionBy("l_suppkey").orderBy(F.col("l_extendedprice").asc(), F.col("row_id").asc())
     ranked = li.withColumn("_rank", F.row_number().over(w))
     ref = ranked.groupBy("_rank").agg(
-        (_dsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("qn_value")
+        (dsum(F.col("l_extendedprice")) / F.count(F.lit(1))).alias("qn_value")
     )
     joined = ranked.join(F.broadcast(ref), "_rank")
     return joined.select("l_suppkey", "row_id", "qn_value")
@@ -774,7 +752,7 @@ WITH ranked AS (
          ) AS rank
   FROM lineitem
 ), ref AS (
-  SELECT rank, {_dsum_sql('l_extendedprice')} / COUNT(*) AS qn_value
+  SELECT rank, {dsum_sql('l_extendedprice')} / COUNT(*) AS qn_value
   FROM ranked GROUP BY rank
 )
 SELECT ranked.l_suppkey, ranked.row_id, ref.qn_value
@@ -806,10 +784,10 @@ agg AS (
   SELECT {group_by}{extra_col},
          COUNT({case_a}) AS n_a,
          COUNT({case_b}) AS n_b,
-         {_dsum_sql(case_a, scale)} AS sa,
-         {_dsum_sql(case_b, scale)} AS sb,
-         {_dsum2_sql(case_a, scale)} AS sa2,
-         {_dsum2_sql(case_b, scale)} AS sb2
+         {dsum_sql(case_a, scale)} AS sa,
+         {dsum_sql(case_b, scale)} AS sb,
+         {dsum2_sql(case_a, scale)} AS sa2,
+         {dsum2_sql(case_b, scale)} AS sb2
   FROM lineitem
   WHERE l_returnflag IN ('R', 'A'){table_filter}
   GROUP BY ALL
@@ -839,9 +817,9 @@ def q_diff_expression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M8 closed form + M10 — per-gene pooled t between return flags
     'R' and 'A' on price, normal-approx p, BH adjustment
     (`DiffExpression_closedPlatform.R:474-633`, `:566` adjust="BH")."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
-    adj = bh_adjust(tt, "p_value", "adj_p_value", tiebreak_col="l_partkey")
+    adj = p_adjust(tt, "p_value", "adj_p_value", tiebreak_col="l_partkey")
     return adj.select(
         "l_partkey",
         "n_a",
@@ -884,9 +862,9 @@ def q_bh_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global single-partition sort; see ``stats/bh.py``).  Output is
     bit-identical to the sort-window form, so the oracle is the standard
     BH SQL — this query IS the equivalence proof at gate SF."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
-    adj = bh_adjust_histogram(tt, "p_value", "adj_p_value", tiebreak_col="l_partkey")
+    adj = p_adjust_histogram(tt, "p_value", "adj_p_value", tiebreak_col="l_partkey")
     return adj.select(
         "l_partkey",
         F.round("p_value", 8).alias("p_value"),
@@ -927,10 +905,10 @@ def q_de_adjust_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (list_reduce left fold for c(n), reverse cummin /
     forward cummax windows), so a hash match proves the dispatcher's
     two non-BH methods on production-shaped p-values, ties included."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
-    out = by_adjust(tt, "p_value", "adj_by", tiebreak_col="l_partkey")
-    out = holm_adjust(out, "p_value", "adj_holm", tiebreak_col="l_partkey")
+    out = p_adjust(tt, "p_value", "adj_by", method="BY", tiebreak_col="l_partkey")
+    out = p_adjust(out, "p_value", "adj_holm", method="holm", tiebreak_col="l_partkey")
     return out.select(
         "l_partkey",
         F.round("p_value", 8).alias("p_value"),
@@ -976,7 +954,7 @@ def q_stouffer_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A15 — weighted Stouffer combination of per-platform DE results
     (platform ~ l_linestatus), ICC-weighted (`Meta_analysis.R:76-121,
     1211-1228`)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
     # one aggregation over the composite (gene, platform) key — a single
     # scan + shuffle instead of one t-test pass per platform
     de = two_group_ttest(
@@ -1029,7 +1007,7 @@ def q_fem_rem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13 — FEM/REM effect-size meta-analysis across platforms
     (`Meta_analysis.R:756-840`; Choi et al. 2003).  All outputs are
     rational/sqrt chains of decimal-exact moments — no rounding."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
     eff = effect_sizes(
         li, "l_partkey", "l_linestatus", "l_returnflag", "l_extendedprice", "A", "R"
     )
@@ -1047,10 +1025,10 @@ WITH agg AS (
   SELECT l_partkey, l_linestatus AS platform,
          COUNT({case_a}) AS n0,
          COUNT({case_r}) AS n1,
-         {_dsum_sql(case_a)} AS s0,
-         {_dsum_sql(case_r)} AS s1,
-         {_dsum2_sql(case_a)} AS s02,
-         {_dsum2_sql(case_r)} AS s12
+         {dsum_sql(case_a)} AS s0,
+         {dsum_sql(case_r)} AS s1,
+         {dsum2_sql(case_a)} AS s02,
+         {dsum2_sql(case_r)} AS s12
   FROM lineitem
   WHERE l_returnflag IN ('A', 'R') AND l_linestatus IN ('O', 'F')
   GROUP BY ALL
@@ -1108,7 +1086,7 @@ FROM fem2 f JOIN rem r ON f.l_partkey = r.l_partkey
 def q_p_improvement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A16 — per-platform p-value improvement log2(p / p_comb)
     (`Meta_analysis.R:1267-1284`)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
     # one aggregation over the composite (gene, platform) key — a single
     # scan + shuffle instead of one t-test pass per platform
     de = two_group_ttest(
@@ -1245,7 +1223,7 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sketch internals are engine-specific, so this is a rows-only
     contract entry; the unit test bounds it against the exact values.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     qs = [0.1, 0.25, 0.5, 0.75, 0.9]
     agg = orders.agg(
         F.expr(
@@ -1265,7 +1243,7 @@ def q_rollup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     disambiguating real NULLs from subtotal rows.  Multi-level
     aggregation the reference computes with repeated scans; one
     expand+aggregate here."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").cast("int").alias("g_flag"),
         F.grouping("l_linestatus").cast("int").alias("g_status"),
@@ -1296,12 +1274,12 @@ def q_pivot_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     discover columns — SURVEY §4.3), decimal-exact sums, zero-filled
     like the reference's count-matrix pivot
     (`GenExpressionComb_RNAseq.pl:232-238`)."""
-    li = _t(spark, sf_dir, "lineitem")
-    dec = F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+    li = read_table(spark, sf_dir, "lineitem")
+    revenue = F.sum(dec("l_extendedprice"))
     return (
         li.groupBy("l_suppkey")
         .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(dec)
+        .agg(revenue)
         .select(
             "l_suppkey",
             *[
@@ -1333,7 +1311,7 @@ def q_melt_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform that turns the reference's gene x sample matrices into
     the engine's canonical long relation (no shuffle: melt is a
     per-row generator)."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.expr(
@@ -1360,7 +1338,7 @@ def q_registry_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the key; existing rows win."""
     from transcriptomics_data_integration_spark.sources.registry import registry_upsert
 
-    sup = _t(spark, sf_dir, "supplier")
+    sup = read_table(spark, sf_dir, "supplier")
     existing = sup.where(F.col("s_suppkey") % 3 == 0).select(
         "s_suppkey", F.col("s_name").alias("name")
     )
@@ -1388,9 +1366,9 @@ def q_full_outer_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique to either side survive with NULLs on the other — completing
     the join-type matrix (inner/left/semi/anti/interval/asof elsewhere).
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     base = li.groupBy("l_partkey", "l_linestatus").agg(
-        _dsum(F.col("l_extendedprice")).alias("s"), F.count(F.lit(1)).alias("n")
+        dsum(F.col("l_extendedprice")).alias("s"), F.count(F.lit(1)).alias("n")
     )
     o = base.where(F.col("l_linestatus") == "O").select(
         "l_partkey", (F.col("s") / F.col("n")).alias("mean_o")
@@ -1407,7 +1385,7 @@ def q_full_outer_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_FULL_OUTER = f"""
 WITH base AS (
   SELECT l_partkey, l_linestatus,
-         {_dsum_sql('l_extendedprice')} AS s, COUNT(*) AS n
+         {dsum_sql('l_extendedprice')} AS s, COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey, l_linestatus
 ), o AS (
   SELECT l_partkey, s / n AS mean_o FROM base WHERE l_linestatus = 'O'
@@ -1440,7 +1418,7 @@ def q_htseq_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         drop_summary_rows,
     )
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     counts = orders.groupBy(
         F.concat(F.lit("g"), (F.col("o_custkey") % 50).cast("string")).alias("gene_id"),
         F.col("o_orderpriority").alias("sample_id"),
@@ -1490,8 +1468,8 @@ def q_rsem_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from transcriptomics_data_integration_spark.sources.rsem import convert_rsem
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     rsem = li.groupBy(
         F.concat(F.lit("s"), (F.col("l_partkey") % 100).cast("string")).alias("gene_symbol"),
         F.col("l_linestatus").alias("sample_id"),
@@ -1576,7 +1554,7 @@ def q_cel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{le2(str(i + 9))}"
         for i in range(4)
     )
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     media = docs.select(
         F.col("doc_id").alias("sample_id"),
         F.expr(f"concat(X'{head.hex()}', {cells})").alias("payload"),
@@ -1655,7 +1633,7 @@ def q_idat_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sds = ", ".join(le2(f"(doc_id * 3 + {7 * i}) % 65536") for i in range(4))
     means = ", ".join(le2(f"(doc_id * 5 + {11 * i}) % 65536") for i in range(4))
     beads = ", ".join(byte(f"(doc_id + {i}) % 256") for i in range(4))
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     media = docs.select(
         F.col("doc_id").alias("sample_id"),
         F.expr(
@@ -1736,7 +1714,7 @@ def q_detection_p(spark: SparkSession, sf_dir: str) -> DataFrame:
     sds = ", ".join(le2(f"(doc_id * 3 + {7 * i}) % 65536") for i in rng)
     means = ", ".join(le2(f"(doc_id * 5 + {11 * i}) % 65536") for i in rng)
     beads = ", ".join(byte(f"(doc_id + {i}) % 256") for i in rng)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     media = docs.select(
         F.col("doc_id").alias("sample_id"),
         F.expr(
@@ -1794,7 +1772,7 @@ def q_jsonl_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     relies on.  The real file scan (PERMISSIVE + corrupt-record column,
     schema-projected) runs on temp files in
     `tests/test_sources_streaming.py::test_read_jsonl_docs_*`."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     line = (
         F.when(
             F.col("doc_id") % 23 == 0,

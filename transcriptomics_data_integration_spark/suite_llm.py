@@ -9,8 +9,6 @@ outputs are rounded.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -39,10 +37,7 @@ from transcriptomics_data_integration_spark.llmdata.text import (
     text_quality,
     token_stats,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from transcriptomics_data_integration_spark.session import read_table
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,7 +51,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session.py), making NTZ->timestamp->unix_micros the same epoch
     DuckDB's epoch_ns() computes on the naive value."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = read_table(spark, sf_dir, "events")
     ts_type = dict(ev.dtypes)["ts"]
     if ts_type != "bigint":
         ev = ev.withColumn(
@@ -97,7 +92,7 @@ def _two_crawls(docs: DataFrame, parallelize: bool = True) -> DataFrame:
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = token_stats(docs)
     return out.select("doc_id", "n_tokens", "n_chars_obs", "n_subtokens")
 
@@ -112,7 +107,7 @@ FROM documents
 
 
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = text_quality(docs)
     return out.select(
         "doc_id", "n_tokens", "mean_token_len", "stopword_ratio", "punct_ratio"
@@ -139,7 +134,7 @@ FROM s
 
 
 def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = language_id(docs)
     return out.groupBy("lang_pred").agg(F.count(F.lit(1)).alias("n_docs"))
 
@@ -169,7 +164,7 @@ SELECT lang_pred, COUNT(*) AS n_docs FROM lab GROUP BY lang_pred
 
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return doc_fingerprint(docs).select("doc_id", "fingerprint")
 
 
@@ -188,7 +183,7 @@ FROM documents
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _two_crawls(_t(spark, sf_dir, "documents"), parallelize=False)
+    docs = _two_crawls(read_table(spark, sf_dir, "documents"), parallelize=False)
     return exact_dedup(docs, "doc_id")
 
 
@@ -212,7 +207,7 @@ _SHINGLE_SQL = (
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-Jaccard baseline is quadratic in corpus size — bounded here
     to the first 1000 docs (the scale path is q_minhash_lsh)."""
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 1000)
+    docs = read_table(spark, sf_dir, "documents").where(F.col("doc_id") < 1000)
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)  # one-split fan-out (r7 finding)
@@ -246,7 +241,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact dup, so the shingle/verify stages run on half the corpus
     and verification touches one edge per clique pair, not every edge).
     """
-    docs = _two_crawls(_t(spark, sf_dir, "documents"))
+    docs = _two_crawls(read_table(spark, sf_dir, "documents"))
     return minhash_lsh_pairs(docs, "doc_id", threshold=0.8)
 
 
@@ -296,7 +291,7 @@ WHERE n_inter / (sa.n_sh + sb.n_sh - n_inter) >= 0.8e0
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return simhash(docs, "doc_id")
 
 
@@ -340,7 +335,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_fixed_topk,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0)
     ivf = ivf_fixed_topk(emb, queries, k=5, n_cells=16, n_probe=2, dim=64).select(
         "query_id", "cand_id"
@@ -432,7 +427,7 @@ FROM q LEFT JOIN hits h USING (query_id)
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0)
     out = cosine_topk(emb, queries, k=5, dim=64)
     return out.select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))
@@ -472,7 +467,7 @@ _BUCKET_SQL = (
 
 
 def q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0)
     out = lsh_bucketed_topk(emb, queries, k=5, n_planes=8, dim=64)
     return out.select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))
@@ -528,7 +523,7 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every vector unioned with a +0.01-per-component perturbed copy):
     banded hyperplane LSH -> exact cosine >= 0.99.  The threshold twin
     of `cosine_topk` — dedup, not search."""
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pert = emb.select(
         (F.col("vec_id") + 1000000).alias("vec_id"),
         F.expr(_PERTURB_SPARK).alias("embedding"),
@@ -580,7 +575,7 @@ def q_multimodal_featurize(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_type passes through and the dimensions are NULL — the honest
     answer, vs the r1-r3 payload-length fake.  Real decoded dimensions
     are gated by ``media_header_decode`` below."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     media = attach_binary_payload(docs, "doc_id")
     return featurize_media(media)
 
@@ -613,7 +608,7 @@ def q_media_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: payload synthesis and featurize are both map-side
     (one mapInPandas pass, zero shuffles)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     w = ((F.col("doc_id") * 7) % 1021 + 1).cast("int")
     h = ((F.col("doc_id") * 13) % 509 + 1).cast("int")
 
@@ -726,7 +721,7 @@ def q_png_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE split (single row group), so without it the whole per-doc
     # codec work runs in one task (r7 finding; the 1-column shuffle is
     # ~free next to the decode work)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     return docs.mapInPandas(
         op,
@@ -824,7 +819,7 @@ def q_jpeg_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE split (single row group), so without it the whole per-doc
     # codec work runs in one task (r7 finding; the 1-column shuffle is
     # ~free next to the decode work)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     return docs.mapInPandas(
         op,
@@ -913,7 +908,7 @@ def q_gif_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE split (single row group), so without it the whole per-doc
     # codec work runs in one task (r7 finding; the 1-column shuffle is
     # ~free next to the decode work)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     return docs.mapInPandas(
         op,
@@ -981,7 +976,7 @@ def q_mp4_header(spark: SparkSession, sf_dir: str) -> DataFrame:
                 columns=["media_id", "width", "height", "duration_ms", "n_tracks"],
             )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(
         op,
         schema=(
@@ -1041,7 +1036,7 @@ def q_flac_header(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "bits_per_sample", "total_samples", "duration_ms"],
             )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(
         op,
         schema=(
@@ -1103,7 +1098,7 @@ def q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(
         op,
         schema=(
@@ -1258,7 +1253,7 @@ def q_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_fixed_topk,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0)
     out = ivf_fixed_topk(emb, queries, k=5, n_cells=16, n_probe=2, dim=64)
     return out.select(
@@ -1334,7 +1329,7 @@ def q_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_fixed_topk,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0)
     return pq_fixed_topk(emb, queries, k=5, m=8, n_cent=16, dim=64)
 
@@ -1410,7 +1405,7 @@ def q_doc_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln() is transcendental -> round(6) per repo FP policy."""
     from transcriptomics_data_integration_spark.llmdata.text import doc_logprob
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = doc_logprob(docs, "doc_id")
     return out.select(
         "doc_id", "n_tokens", F.round("mean_logprob", 6).alias("mean_logprob")
@@ -1445,7 +1440,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations into CTEs with the same list fold."""
     from transcriptomics_data_integration_spark.llmdata.bpe import bpe_train_fixed
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return bpe_train_fixed(docs, "text", n_merges=4)
 
 
@@ -1502,7 +1497,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_train_fixed,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     merges = [
         (r["lhs"], r["rhs"])
         for r in bpe_train_fixed(docs, "text", n_merges=4)
@@ -1588,7 +1583,7 @@ def q_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         edit_distance_pairs,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.col("text")), "[^a-z0-9]+")
     vocab = (
         docs.select(F.explode(toks).alias("w"))
@@ -1637,7 +1632,7 @@ def q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth), translated to RE2 replacement syntax."""
     from transcriptomics_data_integration_spark.llmdata.urls import domain_stats
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("HTTPS://WWW."), F.col("source"), F.lit(".Example.COM:443/docs/"),
         F.col("lang"), F.lit("/"), (F.col("doc_id") % 40).cast("string"),
@@ -1694,7 +1689,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts + the md5 of the deduped text."""
     from transcriptomics_data_integration_spark.llmdata.text import dedup_lines
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     multi = docs.select(
         "doc_id",
         F.concat_ws(
@@ -1756,7 +1751,7 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it on one core — spread the map work ONLY when the scan is
     # under-split (at lake scale the scan splits naturally and this
     # branch inserts no shuffle)
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par, "doc_id")
@@ -1893,7 +1888,7 @@ def q_duplicate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     than once corpus-wide."""
     from transcriptomics_data_integration_spark.llmdata.text import duplicate_chunk_stats
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)  # one-split fan-out (r7 finding)
@@ -1934,7 +1929,7 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     single IEEE divisions, so the oracle matches bitwise."""
     from transcriptomics_data_integration_spark.llmdata.text import repetition_stats
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return repetition_stats(docs, "doc_id", "text")
 
 
@@ -1990,7 +1985,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair.  HASH-GATED end-to-end (`llmdata/similarity.py:semdedup`)."""
     from transcriptomics_data_integration_spark.llmdata.similarity import semdedup
 
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pert = emb.select(
         (F.col("vec_id") + 1000000).alias("vec_id"),
         F.expr(_PERTURB_SPARK).alias("embedding"),
@@ -2074,7 +2069,7 @@ def q_semdedup_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
         semdedup_2level,
     )
 
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pert = emb.select(
         (F.col("vec_id") + 1000000).alias("vec_id"),
         F.expr(_PERTURB_SPARK).alias("embedding"),
@@ -2181,7 +2176,7 @@ def q_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_model_score,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = quality_model_score(docs, "doc_id", "text")
     return out.select(
         "doc_id",
@@ -2272,7 +2267,7 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_accuracy,
     )
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0)
+    docs = read_table(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0)
     out = minhash_accuracy(docs, "doc_id", "text", n_hashes=64)
     return out.select(
         "id_a", "id_b", "n_a", "n_b", "n_inter", "n_match",
@@ -2354,7 +2349,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from transcriptomics_data_integration_spark.runtime import register_persisted
 
-    docs = _two_crawls(_t(spark, sf_dir, "documents"), parallelize=False)
+    docs = _two_crawls(read_table(spark, sf_dir, "documents"), parallelize=False)
     kept_docs = (
         quality_filter(docs).where(F.col("keep")).select("doc_id", "text")
         # three chain branches read the filtered corpus (pair mining,
@@ -2474,7 +2469,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_neardup_pairs,
     )
 
-    docs = _two_crawls(_t(spark, sf_dir, "documents"))
+    docs = _two_crawls(read_table(spark, sf_dir, "documents"))
     return simhash_neardup_pairs(docs, "doc_id", max_hamming=3)
 
 
@@ -2649,7 +2644,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_neardup_pairs,
     )
 
-    docs = _two_crawls(_t(spark, sf_dir, "documents"))
+    docs = _two_crawls(read_table(spark, sf_dir, "documents"))
     # star edges (r8): closure-identical, linear in dup-clique size
     pairs = simhash_neardup_pairs(docs, "doc_id", max_hamming=3, expand="star")
     return dedup_clusters(pairs.select("id_a", "id_b"))
@@ -2715,7 +2710,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_neardup_pairs,
     )
 
-    docs = _two_crawls(_t(spark, sf_dir, "documents"))
+    docs = _two_crawls(read_table(spark, sf_dir, "documents"))
     # star edges (r8): closure-identical, linear in dup-clique size
     pairs = simhash_neardup_pairs(docs, "doc_id", max_hamming=3, expand="star")
     clusters = dedup_clusters(pairs.select("id_a", "id_b"))
@@ -2773,7 +2768,7 @@ def q_winnow_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnow_fingerprints,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par, "doc_id")
@@ -2837,7 +2832,7 @@ def q_domain_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     on more than one doc corpus-wide (cross-source duplicates count
     for every source involved).  One digest-keyed window + one
     source-keyed aggregate; integer counts end-to-end."""
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.md5(F.col("text").cast("binary")).alias("_d")
     )
     w = Window.partitionBy("_d")
@@ -2876,7 +2871,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one row per distinct token), never the raw corpus."""
     from transcriptomics_data_integration_spark.llmdata.text import vocab_topk
 
-    return vocab_topk(_t(spark, sf_dir, "documents"), "lang", "text", k=20)
+    return vocab_topk(read_table(spark, sf_dir, "documents"), "lang", "text", k=20)
 
 
 ORACLE_VOCAB_TOPK = """
@@ -2907,7 +2902,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantization_error,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     out = quantization_error(emb)
     return out.select(
         "vec_id",
@@ -2963,7 +2958,7 @@ def q_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         stratified_sample_exact,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang")
     bern = hash_sample(docs, "doc_id", 0.2).withColumn("method", F.lit("bernoulli"))
     strat = stratified_sample_exact(docs, "lang", "doc_id", 5).withColumn(
         "method", F.lit("stratified")
@@ -3000,7 +2995,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, reproduced exactly by the oracle's window SQL."""
     from transcriptomics_data_integration_spark.llmdata.sampling import pack_sequences
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return pack_sequences(docs, "doc_id", "n_chars", 2048)
 
 
@@ -3034,7 +3029,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the per-doc aggregate."""
     from transcriptomics_data_integration_spark.llmdata.text import contamination_check
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)  # one-split fan-out (r7 finding)
@@ -3076,7 +3071,7 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_contamination,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 97 != 0)
     eval_docs = docs.where(F.col("doc_id") % 97 == 0)
     out = bloom_contamination(train, eval_docs, k=5, n_hashes=3, m_bits=1 << 17)
@@ -3127,7 +3122,7 @@ def q_language_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     `language_id`."""
     from transcriptomics_data_integration_spark.llmdata.text import language_id_ngram
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = language_id_ngram(docs)
     return out.groupBy("lang_pred").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("score").alias("total_score")
@@ -3179,7 +3174,7 @@ def q_vocab_size_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates are engine-specific: rows-only contract entry; the unit
     test bounds the estimate against the exact count.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "lang",
         F.explode(F.split(F.lower(F.col("text")), "[^a-z0-9]+")).alias("token"),
@@ -3237,7 +3232,7 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — the decision layer over `text_quality`'s signals."""
     from transcriptomics_data_integration_spark.llmdata.text import quality_filter
 
-    out = quality_filter(_t(spark, sf_dir, "documents"))
+    out = quality_filter(read_table(spark, sf_dir, "documents"))
     return out.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("keep").cast("int")).alias("n_kept"),
@@ -3298,7 +3293,7 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen — zero shuffles at any corpus size."""
     from transcriptomics_data_integration_spark.llmdata.text import gopher_quality
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return gopher_quality(docs).select(
         "doc_id", "n_tokens",
         "bullet_frac", "ellipsis_frac", "alpha_frac", "symbol_word_ratio",
@@ -3384,7 +3379,7 @@ def q_web_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         html_extract,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 97 != 0)
     eval_docs = docs.where(F.col("doc_id") % 97 == 0)
     html = train.select(
@@ -3520,7 +3515,7 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept-count per source."""
     from transcriptomics_data_integration_spark.llmdata.sampling import mixture_sample
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     srcs = [r["source"] for r in docs.select("source").distinct().collect()]
     srcs.sort()
     fracs = {s: w for s, w in zip(srcs, [0.5, 0.3, 0.2] + [0.0] * 10)}
@@ -3566,7 +3561,7 @@ def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_budget_sample,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return token_budget_sample(
         docs,
         "source",
@@ -3588,7 +3583,7 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the parse + entity decode + boilerplate drop end-to-end."""
     from transcriptomics_data_integration_spark.llmdata.text import html_extract
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.lit(
@@ -3650,7 +3645,7 @@ def q_rle_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id%4==0 gets a 300-char pad run (multi-chunk matches),
     # %4==1 a short 5-char run (single small match), %4==2 a 2-char
     # run (remainder literals), %4==3 prose as-is
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(
             "CASE WHEN doc_id % 4 = 0 THEN concat(text, repeat('x', 300)) "
@@ -3713,7 +3708,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-fits and re-applies the identical model in SQL."""
     from transcriptomics_data_integration_spark.llmdata.text import bigram_logprob
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = bigram_logprob(docs, "doc_id", lam=0.8)
     return out.select(
         "doc_id",
@@ -3782,7 +3777,7 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         robots_filter,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     robots = (
         docs.select("source").distinct().select(
             F.concat(F.col("source"), F.lit(".com")).alias("domain"),
@@ -3922,7 +3917,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     # one-split parquet -> repartition before the Python codec fan-out
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     return docs.mapInPandas(
         op,
@@ -3974,7 +3969,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the 100-row result only."""
     from transcriptomics_data_integration_spark.llmdata.retrieval import bm25_topk
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = bm25_topk(docs, "doc_id", "text", _BM25_TERMS, k=100)
     return out.select(
         "doc_id",
@@ -4046,7 +4041,7 @@ def q_pagerank3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle unrolls the same three rounds as chained CTEs."""
     from transcriptomics_data_integration_spark.llmdata.graph import pagerank_fixed
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     n = docs.count()  # bounded scalar for the edge-formula literal
     edges = None
     for m, a in ((5, 1), (7, 3), (11, 4)):
@@ -4122,7 +4117,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         perplexity_buckets,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return perplexity_buckets(docs, "doc_id", lam=0.8)
 
 
@@ -4160,7 +4155,7 @@ def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         substring_dedup_spans,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     head = (
         "transform(sequence(1, CAST(2 + doc_id % 3 AS INT)), "
         "i -> concat('u', CAST(doc_id AS STRING), '_', CAST(i AS STRING)))"
@@ -4253,7 +4248,7 @@ def q_repetition_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         perplexity_buckets,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     b = perplexity_buckets(docs, "doc_id", lam=0.8)
     out = repetition_schedule(b, "doc_id", "bucket", {1: 3, 2: 2, 3: 1})
     return out.select(
@@ -4350,7 +4345,7 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     return docs.mapInPandas(
         op,
@@ -4407,7 +4402,7 @@ def q_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_warc,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     m = F.col("doc_id") % 7
     path = F.concat(
         F.element_at(
@@ -4528,7 +4523,7 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         tfidf_keywords,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = tfidf_keywords(docs, "doc_id", "text", k=3)
     return out.select(
         "doc_id",
@@ -4582,7 +4577,7 @@ def q_unicode_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the NFC + strip semantics."""
     from transcriptomics_data_integration_spark.llmdata.text import unicode_clean
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -4618,7 +4613,7 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         temperature_sample,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = temperature_sample(docs, "source", "doc_id", total_docs=200, alpha=0.5)
     return out.select("doc_id", "source", "k_target", "rk")
 
@@ -4670,7 +4665,7 @@ def q_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_shuffle,
     )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
     return global_shuffle(docs, "doc_id").select("doc_id", "source", "shuffle_pos")
 
 
@@ -4700,7 +4695,7 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every extracted field from the payload formulas alone
     (it never parses JSON), so a hash match proves the whole
     parse_json -> variant_get path."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     payload = F.concat(
         F.lit('{"doc": {"id": '),
         F.col("doc_id").cast("string"),
@@ -4786,9 +4781,9 @@ def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         leakage_safe_split,
     )
 
-    docs = _two_crawls(_t(spark, sf_dir, "documents")).select("doc_id")
+    docs = _two_crawls(read_table(spark, sf_dir, "documents")).select("doc_id")
     pairs = simhash_neardup_pairs(
-        _two_crawls(_t(spark, sf_dir, "documents")), "doc_id", max_hamming=3,
+        _two_crawls(read_table(spark, sf_dir, "documents")), "doc_id", max_hamming=3,
         expand="star",  # closure-identical, linear in dup-clique size (r8)
     )
     clusters = dedup_clusters(pairs.select("id_a", "id_b"))
@@ -4972,7 +4967,7 @@ def q_normalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     second crawl is a case-mangled copy, so every doc pairs up."""
     from transcriptomics_data_integration_spark.llmdata.text import normalize_text
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     mangled = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.upper(F.col("text")).alias("text"),
@@ -5009,7 +5004,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexp_count/regexp_replace map-side codegen, zero shuffles."""
     from transcriptomics_data_integration_spark.llmdata.text import scrub_pii
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
     injected = docs.select(
         "doc_id",
@@ -5078,7 +5073,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraph counts + the md5 of the reassembled text."""
     from transcriptomics_data_integration_spark.llmdata.dedup import dedup_paragraphs
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     multi = docs.select(
         "doc_id",
         F.concat_ws(
@@ -5157,7 +5152,7 @@ def q_ngram_span_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
         mask_frequent_ngrams,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = mask_frequent_ngrams(docs, "doc_id", n=8, min_count=2)
     return out.select(
         "doc_id",
@@ -5222,7 +5217,7 @@ def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         kneser_ney_logprob,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = kneser_ney_logprob(docs, "doc_id")
     return out.select(
         "doc_id",
@@ -5293,7 +5288,7 @@ def q_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end."""
     from transcriptomics_data_integration_spark.llmdata.text import c4_filter
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), " ")
     lines = F.expr(
         "transform(sequence(1, cast(ceil(size(_t) / 8.0) as int)), i -> "
@@ -5390,7 +5385,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk_documents,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = chunk_documents(docs, "doc_id", chunk_tokens=16, stride=12)
     return out.select(
         "doc_id", "chunk_id", "start_token", "n_chunk_tokens",
@@ -5432,7 +5427,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_logweights,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     w = dsir_logweights(
         docs.withColumn("_tgt", F.col("lang") == "en"), "doc_id", "_tgt"
     ).withColumn("lw", F.round("logweight", 6))
@@ -5503,7 +5498,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     and intercept round 6 dp (repo FP policy)."""
     from transcriptomics_data_integration_spark.llmdata.text import zipf_fit
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     out = zipf_fit(docs, top_n=100)
     return out.select(
         "n_terms",
@@ -5558,7 +5553,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_minhash_dedup,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)  # one-split fan-out (r7 finding)
@@ -5705,7 +5700,7 @@ def q_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         prototype_prune,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     out = prototype_prune(emb, n_cells=16, keep_frac=0.5, dim=64)
     return out.select(
         "vec_id",
@@ -5782,7 +5777,7 @@ def q_c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_line_spans,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), " ")
     lined = docs.select(F.col("doc_id"), toks.alias("_t")).select(
         "doc_id",
@@ -5881,7 +5876,7 @@ def q_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_bins_nfd,
     )
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), " ")).alias("n_tokens"),
     )
@@ -5954,7 +5949,7 @@ def q_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
         url_blocklist_score,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     seg = (
         F.when(F.col("doc_id") % 5 == 0, F.lit("shop"))
         .when(F.col("doc_id") % 5 == 1, F.lit("download"))
@@ -6049,7 +6044,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk_documents,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)  # one-split fan-out (r7 finding)
@@ -6243,7 +6238,7 @@ def q_domain_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
         domain_quality_prior,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     scored = gopher_quality(docs).select("doc_id", "keep")
     with_dom = scored.join(
         docs.select(
@@ -6415,7 +6410,7 @@ def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the DP fold with DuckDB list_reduce."""
     from transcriptomics_data_integration_spark.llmdata.bpe import unigram_train_fixed
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return unigram_train_fixed(docs, "text", vocab_size=40, n_iters=2, n_seed=120)
 
 
@@ -6439,7 +6434,7 @@ def q_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         unigram_train_fixed,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     pieces = unigram_train_fixed(docs, "text", vocab_size=40, n_iters=2, n_seed=120)
     return unigram_encode(docs, pieces)
 
@@ -6538,7 +6533,7 @@ def q_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     # r11 (guide §2.5 input parallelism): the per-doc encode+decode
     # bit-walk is the whole query and runs on the scan's splits — a
     # single-file corpus serializes every FLAC decode in ONE Python
@@ -6669,7 +6664,7 @@ def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((did, bytearray(encode_png(px))))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
@@ -6761,7 +6756,7 @@ def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
@@ -6824,7 +6819,7 @@ def q_wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         wordpiece_train_fixed,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return wordpiece_train_fixed(docs, "text", n_merges=4)
 
 
@@ -6920,7 +6915,7 @@ def q_image_dhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((did, bytearray(encode_png(px))))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
@@ -7011,7 +7006,7 @@ def q_audio_neardup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
@@ -7109,7 +7104,7 @@ def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((did, bytearray(encode_avi_mjpeg(frames, fps=12))))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
@@ -7212,7 +7207,7 @@ def q_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((did, bytearray(encode_tfrecord(recs))))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
@@ -7297,7 +7292,7 @@ def q_video_offset_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((did, bytearray(encode_avi_mjpeg(frames, fps=12))))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)

@@ -7,12 +7,11 @@ numeric behavior is pinned by the golden pytest tests instead.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.llmdata.similarity import ivf_topk
+from transcriptomics_data_integration_spark.session import read_table
 from transcriptomics_data_integration_spark.stats.combat import combat
 from transcriptomics_data_integration_spark.stats.medianpolish import median_polish_summarize
 from transcriptomics_data_integration_spark.stats.mlkernels import (
@@ -24,12 +23,8 @@ from transcriptomics_data_integration_spark.stats.mlkernels import (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def _cells(spark: SparkSession, sf_dir: str, n_genes: int = 20) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= n_genes)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= n_genes)
     return li.groupBy(
         F.col("l_partkey").cast("string").alias("gene_id"),
         (F.col("l_suppkey") % 50).cast("string").alias("sample_id"),
@@ -59,8 +54,8 @@ def _gene_list(cells: DataFrame) -> list[str]:
 def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2 — RMA-style median-polish summarization of probes (parts) to
     probesets (brands) over bucketed samples."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     probes = (
         li.join(
             F.broadcast(part.select(F.col("p_partkey").alias("l_partkey"), "p_brand")),
@@ -79,7 +74,7 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_combat_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M6 — full empirical-Bayes ComBat (iterative per-batch solver)
     across linestatus batches; per-(gene, batch) post-adjustment means."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_partkey") <= 200) & F.col("l_linestatus").isin(["O", "F"])
     )
     long = li.select(
@@ -100,7 +95,7 @@ def q_combat_nonparam(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-sum-exp `int.eprior` override, `DiffExpression_closedPlatform.R
     :108-156,169`); O(G^2) per batch, so bounded to the F5-style gene
     subset like the reference's post-filter usage."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_partkey") <= 200) & F.col("l_linestatus").isin(["O", "F"])
     )
     long = li.select(
@@ -203,7 +198,7 @@ def q_pca_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_logistic_de(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M14 — per-gene logistic regression of return outcome on price."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_partkey") <= 100) & F.col("l_returnflag").isin(["R", "A"])
     )
     out = logistic_per_gene(li, "l_partkey", "l_returnflag", "l_extendedprice", "R")
@@ -221,7 +216,7 @@ def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_train,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     books, _dims = pq_train(emb, m=8, k=16, seed=1)
     codes = pq_encode(emb, books)
     queries = emb.where(F.col("vec_id") % 25 == 0)
@@ -231,7 +226,7 @@ def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN — k-means coarse quantizer + probed exact re-rank."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 25 == 0)
     out = ivf_topk(emb, queries, k=5, n_cells=8, n_probe=2)
     return out.select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))

@@ -3,14 +3,13 @@ the end-to-end expression-matrix pipeline (entry-point A step 4)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from transcriptomics_data_integration_spark.functions.special import fitfdist_prior_ctes_sql
 
 from transcriptomics_data_integration_spark.pipelines.expression import build_expression_matrix
+from transcriptomics_data_integration_spark.session import read_table
 from transcriptomics_data_integration_spark.stats.normalize import (
     array_weights,
     cqn_simplified,
@@ -20,14 +19,10 @@ from transcriptomics_data_integration_spark.stats.normalize import (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def _counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer read-count analogue: summed quantities per
     (gene ~ partkey, sample ~ suppkey) — exact in double."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.col("l_partkey").alias("gene_id"), F.col("l_suppkey").alias("sample_id")
     ).agg(F.sum("l_quantity").alias("cnt"))
@@ -92,7 +87,7 @@ def q_cqn_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2-CPM; per-bin per-sample summary
     (`GenExpressionComb_RNAseq.R:183-201`)."""
     counts = _counts(spark, sf_dir)
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     attrs = part.select(F.col("p_partkey").alias("gene_id"), F.col("p_size").alias("gc"))
     out = cqn_simplified(counts, "gene_id", "sample_id", "cnt", attrs, "gc", n_bins=10)
     return out.groupBy("gc_bin", "sample_id").agg(
@@ -126,7 +121,7 @@ GROUP BY w.gc_bin, w.sample_id
 def q_array_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M7 — per-sample quality weights
     (`DiffExpression_closedPlatform.R:456-464`)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     df = li.select(
         F.col("l_partkey").alias("gene_id"),
         F.col("l_suppkey").alias("sample_id"),
@@ -164,7 +159,7 @@ FROM per_sample CROSS JOIN mw
 def q_qc_sample_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M18 — per-sample distribution summaries (QC boxplot data,
     `QC_Affy_U133Plus2.R:122-138`)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = qc_sample_metrics(
         li.select(F.col("l_suppkey").alias("sample_id"), F.col("l_extendedprice").alias("v")),
         "sample_id",
@@ -200,7 +195,7 @@ def q_qc_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw 2-decimal prices put IQRs on .00X25 ROUND half-boundaries and
     flipped 8 samples at sf0.1), SE fabric = discount + 0.01 (strictly
     positive so the gene-median normalizer never divides by zero)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = qc_rle_nuse(
         li.select(
             F.col("l_partkey").alias("gene"),
@@ -262,7 +257,7 @@ def q_rna_degradation(spark: SparkSession, sf_dir: str) -> DataFrame:
         rna_degradation,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = rna_degradation(
         li.select(
             F.col("l_suppkey").alias("sample_id"),
@@ -336,9 +331,9 @@ def q_expression_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entry-point A step 4 end-to-end: target projection, packed-list
     outlier removal, probe->gene map join, argmax-dedup collapse, zero-
     variance filter (`GenExpressionComb_Affy_U133Plus2.R:110-189`)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    sup = _t(spark, sf_dir, "supplier")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
+    sup = read_table(spark, sf_dir, "supplier")
     intensities = li.groupBy(
         F.col("l_partkey").cast("string").alias("probe"),
         F.col("l_suppkey").cast("string").alias("sample_id"),
@@ -437,7 +432,7 @@ def q_cqn_spline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from transcriptomics_data_integration_spark.stats.normalize import cqn_spline
 
     counts = _counts(spark, sf_dir)
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     attrs = part.select(F.col("p_partkey").alias("gene_id"), F.col("p_size").alias("gc"))
     out = cqn_spline(counts, "gene_id", "sample_id", "cnt", attrs, "gc")
     return out.groupBy("sample_id").agg(
@@ -460,7 +455,7 @@ def q_rnaseq_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     counts = _counts(spark, sf_dir).withColumnRenamed("cnt", "read_count")
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     attrs = part.select(
         F.col("p_partkey").alias("gene_id"), F.col("p_size").alias("gc_content")
     )
@@ -493,7 +488,7 @@ def q_rnaseq_pipeline_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     counts = _counts(spark, sf_dir).withColumnRenamed("cnt", "read_count")
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     attrs = part.select(
         F.col("p_partkey").alias("gene_id"), F.col("p_size").alias("gc_content")
     )
@@ -644,7 +639,7 @@ def q_closed_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         differential_expression,
     )
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 300)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 300)
     cells = li.groupBy(
         F.col("l_partkey").alias("gene_id"), F.col("l_suppkey").alias("sample_id")
     ).agg(
@@ -792,7 +787,7 @@ def q_normalized_de(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalized_matrix_de,
     )
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 300)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 300)
     cells = li.groupBy(
         F.col("l_partkey").alias("gene_id"), F.col("l_suppkey").alias("sample_id")
     ).agg(
@@ -803,7 +798,7 @@ def q_normalized_de(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value")
         ),
     )
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     restrict = part.where(F.col("p_size") % 4 != 0).select(
         F.col("p_partkey").alias("gene_id")
     )
@@ -972,7 +967,7 @@ def q_weighted_de(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`DiffExpression_closedPlatform.R:456-474`, lmFit weights)."""
     from transcriptomics_data_integration_spark.stats.ttest import weighted_two_group_ttest
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     fact = li.select(
         F.col("l_partkey").alias("gene_id"),
         F.col("l_suppkey").alias("sample_id"),
@@ -1001,7 +996,7 @@ ORACLE_WEIGHTED_DE = None  # filled below (needs the normal-p formula)
 def q_dataset_group_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 — per-dataset group means pivoted wide
     (`Study_effect.R:284-298` cross-study scatter data)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
     dec = F.col("l_extendedprice").cast("decimal(18,2)")
     wide = (
         li.groupBy(F.col("l_partkey").alias("gene_id"))
@@ -1111,7 +1106,7 @@ def q_combat_eb2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``combat_full``, matching this kernel to ~1e-6 at high n_iter)."""
     from transcriptomics_data_integration_spark.stats.combat import combat_eb_fixed
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 120)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 120)
     cells = li.groupBy(
         F.col("l_partkey").alias("gene_id"),
         (F.col("l_suppkey") % 60).alias("sample_id"),
@@ -1438,7 +1433,7 @@ def q_cqn_irls2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     counts = _counts(spark, sf_dir)
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     attrs = part.select(F.col("p_partkey").alias("gene_id"), F.col("p_size").alias("gc"))
     out = cqn_irls2_fixed(counts, "gene_id", "sample_id", "cnt", attrs, "gc")
     return out.groupBy("sample_id").agg(

@@ -9,33 +9,23 @@ sum/transform irrational intermediates) are rounded.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from transcriptomics_data_integration_spark.functions.exact import dsum2_sql, dsum_sql
 from transcriptomics_data_integration_spark.functions.normal import two_sided_p_sql
+from transcriptomics_data_integration_spark.session import read_table
 from transcriptomics_data_integration_spark.stats.enrichment import enrichment_chi2
 from transcriptomics_data_integration_spark.stats.icc import icc
 from transcriptomics_data_integration_spark.stats.permutation import permutation_fdr
 from transcriptomics_data_integration_spark.stats.ttest import two_group_ttest
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(18,2))) AS DOUBLE)"
-_DSUM2 = (
-    "CAST(SUM(CAST(CAST({x} AS DECIMAL(18,2)) * CAST({x} AS DECIMAL(18,2)) "
-    "AS DECIMAL(38,4))) AS DOUBLE)"
-)
-
 _TOP_GENES_CTE = f"""
 gstats AS (
   SELECT l_partkey,
-         {_DSUM.format(x='l_extendedprice')} AS s,
-         {_DSUM2.format(x='l_extendedprice')} AS s2,
+         {dsum_sql('l_extendedprice')} AS s,
+         {dsum2_sql('l_extendedprice')} AS s2,
          COUNT(*) AS n
   FROM lineitem GROUP BY l_partkey HAVING COUNT(*) >= 2
 ), topg AS (
@@ -48,7 +38,7 @@ gstats AS (
 
 
 def _top_genes(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     agg = (
         li.groupBy("l_partkey")
         .agg(
@@ -77,7 +67,7 @@ def q_batch_center(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M6 (closed-form core) — location-only batch adjustment:
     x - batch_mean_g + weighted grand_mean_g, exact decimal moments
     (`DiffExpression_closedPlatform.R:368-437`)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 100)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 100)
     per_gb = li.groupBy("l_partkey", "l_linestatus").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("s_gb"),
         F.count(F.lit(1)).alias("n_gb"),
@@ -108,11 +98,11 @@ WITH li AS (
   SELECT * FROM lineitem WHERE l_partkey <= 100
 ), per_gb AS (
   SELECT l_partkey, l_linestatus,
-         {_DSUM.format(x='l_extendedprice')} AS s_gb, COUNT(*) AS n_gb
+         {dsum_sql('l_extendedprice')} AS s_gb, COUNT(*) AS n_gb
   FROM li GROUP BY l_partkey, l_linestatus
 ), per_g AS (
   SELECT l_partkey,
-         {_DSUM.format(x='l_extendedprice')} AS s_g, COUNT(*) AS n_g
+         {dsum_sql('l_extendedprice')} AS s_g, COUNT(*) AS n_g
   FROM li GROUP BY l_partkey
 )
 SELECT l_orderkey, l_linenumber, li.l_partkey, li.l_linestatus,
@@ -135,7 +125,7 @@ def q_icc_dimsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier's error against it."""
     from transcriptomics_data_integration_spark.stats.icc import icc_dimsum
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["F", "O"]))
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["F", "O"]))
     genes = _top_genes(spark, sf_dir, 40)
     cells = (
         li.join(F.broadcast(genes), "l_partkey")
@@ -155,7 +145,7 @@ def q_icc_dimsum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_icc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 — integrative correlation over the (O, F) platform pair on
     the top-40-variance genes (`Meta_analysis.R:312-347`)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["O", "F"]))
     genes = _top_genes(spark, sf_dir, 40)
     # sample key bucketed mod 100: keeps the gene x sample cell matrix
     # dense at every SF (raw suppkey goes sparse at sf >= 0.1 and the
@@ -181,7 +171,7 @@ def q_icc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_ICC = f"""
 WITH {_TOP_GENES_CTE}, cells AS (
   SELECT l_linestatus AS platform, l_partkey AS gene_id, l_suppkey % 100 AS sample_id,
-         {_DSUM.format(x='l_extendedprice')} AS value
+         {dsum_sql('l_extendedprice')} AS value
   FROM lineitem
   WHERE l_linestatus IN ('O', 'F')
     AND l_partkey IN (SELECT l_partkey FROM topg WHERE rn <= 40)
@@ -189,11 +179,11 @@ WITH {_TOP_GENES_CTE}, cells AS (
 ), pairs AS (
   SELECT a.platform, a.gene_id AS g, b.gene_id AS h,
          COUNT(*) AS n,
-         {_DSUM.format(x='a.value')} AS sx,
-         {_DSUM.format(x='b.value')} AS sy,
+         {dsum_sql('a.value')} AS sx,
+         {dsum_sql('b.value')} AS sy,
          CAST(SUM(CAST(CAST(a.value AS DECIMAL(18,2)) * CAST(b.value AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS DOUBLE) AS sxy,
-         {_DSUM2.format(x='a.value')} AS sx2,
-         {_DSUM2.format(x='b.value')} AS sy2
+         {dsum2_sql('a.value')} AS sx2,
+         {dsum2_sql('b.value')} AS sy2
   FROM cells a JOIN cells b
     ON a.platform = b.platform AND a.sample_id = b.sample_id AND a.gene_id <> b.gene_id
   GROUP BY 1, 2, 3
@@ -229,7 +219,7 @@ def q_icc_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     saturates there; measured loss in PLANS.md r7).  The partner
     subset is SQL-replayable, so unlike DIMSUM this tier hash-matches
     a DuckDB oracle end-to-end."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["F", "O"]))
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_linestatus").isin(["F", "O"]))
     genes = _top_genes(spark, sf_dir, 40)
     cells = (
         li.join(F.broadcast(genes), "l_partkey")
@@ -258,7 +248,7 @@ _ICC_PARTNER_HALF = 576460752303423488
 ORACLE_ICC_SAMPLED = f"""
 WITH {_TOP_GENES_CTE}, cells AS (
   SELECT l_linestatus AS platform, l_partkey AS gene_id, l_suppkey % 100 AS sample_id,
-         {_DSUM.format(x='l_extendedprice')} AS value
+         {dsum_sql('l_extendedprice')} AS value
   FROM lineitem
   WHERE l_linestatus IN ('O', 'F')
     AND l_partkey IN (SELECT l_partkey FROM topg WHERE rn <= 40)
@@ -266,11 +256,11 @@ WITH {_TOP_GENES_CTE}, cells AS (
 ), pairs AS (
   SELECT a.platform, a.gene_id AS g, b.gene_id AS h,
          COUNT(*) AS n,
-         {_DSUM.format(x='a.value')} AS sx,
-         {_DSUM.format(x='b.value')} AS sy,
+         {dsum_sql('a.value')} AS sx,
+         {dsum_sql('b.value')} AS sy,
          CAST(SUM(CAST(CAST(a.value AS DECIMAL(18,2)) * CAST(b.value AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS DOUBLE) AS sxy,
-         {_DSUM2.format(x='a.value')} AS sx2,
-         {_DSUM2.format(x='b.value')} AS sy2
+         {dsum2_sql('a.value')} AS sx2,
+         {dsum2_sql('b.value')} AS sy2
   FROM cells a JOIN cells b
     ON a.platform = b.platform AND a.sample_id = b.sample_id AND a.gene_id <> b.gene_id
    AND ('0x' || substring(md5('icc-partner#' || CAST(b.gene_id AS VARCHAR)), 1, 15))::BIGINT < {_ICC_PARTNER_HALF}
@@ -305,8 +295,8 @@ WHERE (n * sx2 - sx * sx) > 0 AND (n * sy2 - sy * sy) > 0
 def q_permutation_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14 — permutation FDR with the deterministic md5 permutation
     family (`Meta_analysis.R:896-956`, nperm budget `:902`)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier").select(
+    li = read_table(spark, sf_dir, "lineitem")
+    sup = read_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("l_suppkey"),
         F.when(F.col("s_suppkey") % 3 == 0, "A").otherwise("R").alias("grp"),
     )
@@ -344,10 +334,10 @@ hashed AS (
   SELECT l_partkey, k,
          COUNT(CASE WHEN perm_group = 'A' THEN l_extendedprice END) AS n_a,
          COUNT(CASE WHEN perm_group = 'R' THEN l_extendedprice END) AS n_b,
-         {_DSUM.format(x="CASE WHEN perm_group = 'A' THEN l_extendedprice END")} AS sa,
-         {_DSUM.format(x="CASE WHEN perm_group = 'R' THEN l_extendedprice END")} AS sb,
-         {_DSUM2.format(x="CASE WHEN perm_group = 'A' THEN l_extendedprice END")} AS sa2,
-         {_DSUM2.format(x="CASE WHEN perm_group = 'R' THEN l_extendedprice END")} AS sb2
+         {dsum_sql("CASE WHEN perm_group = 'A' THEN l_extendedprice END")} AS sa,
+         {dsum_sql("CASE WHEN perm_group = 'R' THEN l_extendedprice END")} AS sb,
+         {dsum2_sql("CASE WHEN perm_group = 'A' THEN l_extendedprice END")} AS sa2,
+         {dsum2_sql("CASE WHEN perm_group = 'R' THEN l_extendedprice END")} AS sb2
   FROM fact GROUP BY l_partkey, k
   HAVING COUNT(CASE WHEN perm_group = 'A' THEN l_extendedprice END) >= 2
      AND COUNT(CASE WHEN perm_group = 'R' THEN l_extendedprice END) >= 2
@@ -385,7 +375,7 @@ def q_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M17 — multivariate sample-outlier score: standardized squared
     distance over the top-20-variance genes (diagonal covariance), the
     ArrayOutliers analogue (`QC_Affy_U133Plus2.R:156-164`)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     genes = _top_genes(spark, sf_dir, 20)
     cells = (
         li.join(F.broadcast(genes), "l_partkey")
@@ -419,14 +409,14 @@ def q_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_MAHALANOBIS = f"""
 WITH {_TOP_GENES_CTE}, cells AS (
   SELECT l_partkey AS g, l_suppkey AS s,
-         {_DSUM.format(x='l_extendedprice')} AS cell
+         {dsum_sql('l_extendedprice')} AS cell
   FROM lineitem
   WHERE l_partkey IN (SELECT l_partkey FROM topg WHERE rn <= 20)
   GROUP BY 1, 2
 ), stats AS (
   SELECT g,
-         {_DSUM.format(x='cell')} AS cs,
-         {_DSUM2.format(x='cell')} AS cs2,
+         {dsum_sql('cell')} AS cs,
+         {dsum2_sql('cell')} AS cs2,
          COUNT(*) AS cn
   FROM cells GROUP BY g HAVING COUNT(*) >= 2
 ), ms AS (
@@ -449,8 +439,8 @@ def q_strata_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11 — pairwise sample correlations stratified by same-nation vs
     cross-nation (`Study_effect.R:320-398` same-group/cross-study
     strata)."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_suppkey") <= 60)
-    sup = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_suppkey") <= 60)
+    sup = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     cells = li.groupBy(
         F.col("l_partkey").alias("g"), F.col("l_suppkey").alias("s")
     ).agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("cell"))
@@ -499,15 +489,15 @@ def q_strata_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_STRATA = f"""
 WITH cells AS (
   SELECT l_partkey AS g, l_suppkey AS s,
-         {_DSUM.format(x='l_extendedprice')} AS cell
+         {dsum_sql('l_extendedprice')} AS cell
   FROM lineitem WHERE l_suppkey <= 60 GROUP BY 1, 2
 ), pairs AS (
   SELECT a.s AS s_a, b.s AS s_b, COUNT(*) AS n,
-         {_DSUM.format(x='a.cell')} AS sx,
-         {_DSUM.format(x='b.cell')} AS sy,
+         {dsum_sql('a.cell')} AS sx,
+         {dsum_sql('b.cell')} AS sy,
          CAST(SUM(CAST(CAST(a.cell AS DECIMAL(18,2)) * CAST(b.cell AS DECIMAL(18,2)) AS DECIMAL(38,4))) AS DOUBLE) AS sxy,
-         {_DSUM2.format(x='a.cell')} AS sx2,
-         {_DSUM2.format(x='b.cell')} AS sy2
+         {dsum2_sql('a.cell')} AS sx2,
+         {dsum2_sql('b.cell')} AS sy2
   FROM cells a JOIN cells b ON a.g = b.g AND a.s < b.s
   GROUP BY 1, 2 HAVING COUNT(*) >= 3
 ), r AS (
@@ -530,8 +520,8 @@ JOIN supplier sb ON s_b = sb.s_suppkey
 def q_term_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A17 — term enrichment (chi-square form) of the top-|t| decile
     against part-type terms (`Meta_analysis.R:1359-1392`)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
     n_genes = tt.count()
     n_top = n_genes // 10
@@ -601,8 +591,8 @@ def q_fisher_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         fisher_enrichment,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     tt = two_group_ttest(li, "l_partkey", "l_returnflag", "l_extendedprice", "R", "A")
     n_genes = tt.count()
     n_top = n_genes // 10
@@ -672,7 +662,7 @@ def q_moderated_de(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integers stay far below 2^53 at every SF (beyond it DuckDB's
     # int128 -> double -> /10^scale cast double-rounds while Spark's
     # BigDecimal cast rounds once)
-    li = _t(spark, sf_dir, "lineitem").withColumn(
+    li = read_table(spark, sf_dir, "lineitem").withColumn(
         "qty_scaled",
         (F.col("l_quantity") * (1 + F.col("l_partkey") % 7)).cast("double"),
     )
@@ -755,7 +745,7 @@ def q_meta_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible; transcendental-tainted outputs round 6-8."""
     from transcriptomics_data_integration_spark.pipelines.meta import meta_analysis
 
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_partkey") <= 150) & F.col("l_linestatus").isin(["O", "F"])
     )
     cells = li.groupBy(
@@ -796,7 +786,7 @@ def _oracle_meta_pipeline() -> str:
 WITH cells AS (
   SELECT l_linestatus AS platform, l_partkey AS gene_id,
          l_suppkey % 40 AS sample_id,
-         {_DSUM.format(x='l_extendedprice')} AS v
+         {dsum_sql('l_extendedprice')} AS v
   FROM lineitem
   WHERE l_partkey <= 150 AND l_linestatus IN ('O', 'F')
   GROUP BY 1, 2, 3
@@ -804,10 +794,10 @@ WITH cells AS (
   SELECT gene_id, platform,
          COUNT(CASE WHEN sample_id % 2 = 0 THEN v END) AS n_a,
          COUNT(CASE WHEN sample_id % 2 <> 0 THEN v END) AS n_b,
-         {_DSUM.format(x='CASE WHEN sample_id % 2 = 0 THEN v END')} AS sa,
-         {_DSUM.format(x='CASE WHEN sample_id % 2 <> 0 THEN v END')} AS sb,
-         {_DSUM2.format(x='CASE WHEN sample_id % 2 = 0 THEN v END')} AS sa2,
-         {_DSUM2.format(x='CASE WHEN sample_id % 2 <> 0 THEN v END')} AS sb2
+         {dsum_sql('CASE WHEN sample_id % 2 = 0 THEN v END')} AS sa,
+         {dsum_sql('CASE WHEN sample_id % 2 <> 0 THEN v END')} AS sb,
+         {dsum2_sql('CASE WHEN sample_id % 2 = 0 THEN v END')} AS sa2,
+         {dsum2_sql('CASE WHEN sample_id % 2 <> 0 THEN v END')} AS sb2
   FROM cells GROUP BY 1, 2
   HAVING COUNT(CASE WHEN sample_id % 2 = 0 THEN v END) >= 2
      AND COUNT(CASE WHEN sample_id % 2 <> 0 THEN v END) >= 2
@@ -832,11 +822,11 @@ WITH cells AS (
 ), pairs AS (
   SELECT a.platform, a.gene_id AS g, b.gene_id AS h,
          COUNT(*) AS n,
-         {_DSUM.format(x='a.v')} AS sx,
-         {_DSUM.format(x='b.v')} AS sy,
+         {dsum_sql('a.v')} AS sx,
+         {dsum_sql('b.v')} AS sy,
          {dprod.format(x='a.v', y='b.v')} AS sxy,
-         {_DSUM2.format(x='a.v')} AS sx2,
-         {_DSUM2.format(x='b.v')} AS sy2
+         {dsum2_sql('a.v')} AS sx2,
+         {dsum2_sql('b.v')} AS sy2
   FROM cells a JOIN cells b
     ON a.platform = b.platform AND a.sample_id = b.sample_id
    AND a.gene_id <> b.gene_id
@@ -905,7 +895,7 @@ def q_dup_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets; replicates ~ lineitems within a block."""
     from transcriptomics_data_integration_spark.stats.dupcorr import per_gene_block_icc
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 500)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 500)
     df = li.select(
         F.col("l_partkey").alias("gene_id"),
         (F.col("l_suppkey") % 10).alias("block"),
@@ -970,7 +960,7 @@ def q_blocked_de(spark: SparkSession, sf_dir: str) -> DataFrame:
         blocked_gls_ttest,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     # +3000/block: a deterministic block-mean component so the
     # per-gene ICCs (and hence the consensus) are solidly POSITIVE —
     # compound symmetry needs rho > -1/(n_max - 1) for a PD V, and
@@ -1108,9 +1098,9 @@ def q_pairwise_contrasts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from itertools import combinations
 
     from transcriptomics_data_integration_spark.operators.aggregates import bitmask_venn
-    from transcriptomics_data_integration_spark.stats.bh import bh_adjust
+    from transcriptomics_data_integration_spark.stats.bh import p_adjust
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     groups = ["A", "N", "R"]
     per_contrast = []
     for ga, gb in combinations(groups, 2):
@@ -1119,7 +1109,7 @@ def q_pairwise_contrasts(spark: SparkSession, sf_dir: str) -> DataFrame:
     de = per_contrast[0]
     for d in per_contrast[1:]:
         de = de.unionByName(d)
-    adj = bh_adjust(
+    adj = p_adjust(
         de, "p_value", "adj_p_value", partition_cols=["contrast"], tiebreak_col="l_partkey"
     )
     decided = adj.withColumn(
@@ -1140,8 +1130,8 @@ def _oracle_pairwise_contrasts() -> str:
         pieces.append(f"""
 SELECT l_partkey, '{ga}vs{gb}' AS contrast,
        COUNT({ca}) AS n_a, COUNT({cb}) AS n_b,
-       {_DSUM.format(x=ca)} AS sa, {_DSUM.format(x=cb)} AS sb,
-       {_DSUM2.format(x=ca)} AS sa2, {_DSUM2.format(x=cb)} AS sb2
+       {dsum_sql(ca)} AS sa, {dsum_sql(cb)} AS sb,
+       {dsum2_sql(ca)} AS sa2, {dsum2_sql(cb)} AS sb2
 FROM lineitem WHERE l_returnflag IN ('{ga}', '{gb}')
 GROUP BY l_partkey
 HAVING COUNT({ca}) >= 2 AND COUNT({cb}) >= 2""")
@@ -1200,7 +1190,7 @@ def q_lmfit_design(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference lmFit sites `DiffExpression_closedPlatform.R:511-546`."""
     from transcriptomics_data_integration_spark.stats.lmfit import lmfit_design
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     out = lmfit_design(
         li, "l_partkey", "l_returnflag = 'R'", "l_quantity", "l_extendedprice"
     )
@@ -1265,7 +1255,7 @@ def q_impute_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the observed cells."""
     from transcriptomics_data_integration_spark.stats.mlkernels import impute_missing
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     cells = li.select(
         F.col("l_partkey").alias("gene_id"),
         "l_orderkey",
@@ -1313,7 +1303,7 @@ def q_impute_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines."""
     from transcriptomics_data_integration_spark.stats.mlkernels import impute_missing_em
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 200)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 200)
     cells = li.groupBy(
         F.col("l_partkey").alias("gene_id"),
         (F.col("l_suppkey") % 50).alias("sample_id"),
@@ -1384,8 +1374,8 @@ def q_median_polish_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         median_polish_summarize,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     probes = (
         li.join(
             F.broadcast(part.select(F.col("p_partkey").alias("l_partkey"), "p_brand")),
@@ -1481,7 +1471,7 @@ def q_logistic_irls2(spark: SparkSession, sf_dir: str) -> DataFrame:
         logistic_per_gene_fixed,
     )
 
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_partkey") <= 100) & F.col("l_returnflag").isin(["R", "A"])
     )
     out = logistic_per_gene_fixed(li, "l_partkey", "l_returnflag", "l_extendedprice", "R")
@@ -1557,7 +1547,7 @@ def q_sample_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_distance_matrix,
     )
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 500)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 500)
     cells = li.groupBy(
         F.col("l_partkey").alias("gene_id"),
         (F.col("l_suppkey") % 25).alias("sample_id"),
@@ -1611,7 +1601,7 @@ def q_pca_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         feature_covariance,
     )
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 25)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 25)
     cells = li.groupBy(
         F.col("l_partkey").alias("gene_id"),
         (F.col("l_suppkey") % 50).alias("sample_id"),
@@ -1638,7 +1628,7 @@ def q_pca_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_PCA_COVARIANCE = f"""
 WITH cells AS (
   SELECT l_partkey AS gene_id, l_suppkey % 50 AS sample_id,
-         {_DSUM.format(x='l_extendedprice')} AS v
+         {dsum_sql('l_extendedprice')} AS v
   FROM lineitem WHERE l_partkey <= 25 GROUP BY 1, 2
 ), grid AS (
   SELECT g.gene_id, s.sample_id, COALESCE(c.v, 0.0e0) AS v
@@ -1651,10 +1641,10 @@ WITH cells AS (
   WHERE a.gene_id <= b.gene_id
 ), mom AS (
   SELECT ga, gb, CAST(COUNT(*) AS BIGINT) AS n,
-         {_DSUM.format(x='x')} AS sx, {_DSUM.format(x='y')} AS sy,
+         {dsum_sql('x')} AS sx, {dsum_sql('y')} AS sy,
          CAST(SUM(CAST(CAST(x AS DECIMAL(18,2)) * CAST(y AS DECIMAL(18,2))
               AS DECIMAL(38,4))) AS DOUBLE) AS sxy,
-         {_DSUM2.format(x='x')} AS sx2, {_DSUM2.format(x='y')} AS sy2
+         {dsum2_sql('x')} AS sx2, {dsum2_sql('y')} AS sy2
   FROM pairs GROUP BY 1, 2
 )
 SELECT ga, gb, n,
@@ -1679,7 +1669,7 @@ def q_mds_bmatrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's BigDecimal rounding on large fractional decimals."""
     from transcriptomics_data_integration_spark.stats.mlkernels import mds_bmatrix
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 300)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 300)
     cells = li.groupBy(
         F.col("l_partkey").alias("gene_id"),
         (F.col("l_suppkey") % 20).alias("sample_id"),
@@ -1752,7 +1742,7 @@ def q_kmeans_lloyd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_lloyd_fixed,
     )
 
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 60)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_partkey") <= 60)
     cells = li.groupBy(
         F.col("l_partkey").alias("gene_id"),
         (F.col("l_suppkey") % 40).alias("sample_id"),
@@ -1836,7 +1826,7 @@ def q_moderated_lmfit(spark: SparkSession, sf_dir: str) -> DataFrame:
         moderated_lmfit,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     fit = lmfit_design(
         li, "l_partkey", "l_returnflag = 'R'", "l_quantity", "l_extendedprice"
     )
@@ -1908,7 +1898,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     skyline_2d`)."""
     from transcriptomics_data_integration_spark.operators.aggregates import skyline_2d
 
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     out = skyline_2d(part, "p_retailprice", "p_size")
     return out.select(
         F.col("p_retailprice").cast("double").alias("p_retailprice"),
@@ -1942,7 +1932,7 @@ def q_ks_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
     values, asymptotic Kolmogorov p (`stats/kstest.py`)."""
     from transcriptomics_data_integration_spark.stats.kstest import ks_test
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderpriority", F.col("o_totalprice").cast("double").alias("v")
     )
     out = ks_test(orders, "o_orderpriority", "v", "1-URGENT", "5-LOW")
@@ -1998,8 +1988,8 @@ def q_gsea_es(spark: SparkSession, sf_dir: str) -> DataFrame:
         gsea_enrichment_scores,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     ranked = (
         li.groupBy("l_partkey")
         .agg(F.sum("l_quantity").cast("bigint").alias("_qty"))
@@ -2080,13 +2070,13 @@ def q_p_adjust_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     {'none','BH','fdr','BY','holm'}; consumed by ``topTable`` at
     `:566,600`).  A deterministic p-set with heavy ties (orderkey
     Knuth-hash quantized to 4096 levels, so ~n/4096 rows share each p)
-    runs through ``stats.bh.by_adjust``; the oracle replays R's exact
+    runs through ``stats.bh.p_adjust(method="BY")``; the oracle replays R's exact
     formula — ordered-left-fold harmonic factor via ``list_reduce``,
     the ``q * n/i * p`` operand order, reverse cummin — so a hash
     match proves the doubles bit-for-bit, tie collapse included."""
-    from transcriptomics_data_integration_spark.stats.bh import by_adjust
+    from transcriptomics_data_integration_spark.stats.bh import p_adjust
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     ps = orders.where((F.col("o_orderkey") % 4) == 1).select(
         F.col("o_orderkey").alias("id"),
         (
@@ -2094,7 +2084,7 @@ def q_p_adjust_by(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(4095.0)
         ).alias("p_value"),
     )
-    return by_adjust(ps, "p_value", "adj_by", tiebreak_col="id")
+    return p_adjust(ps, "p_value", "adj_by", method="BY", tiebreak_col="id")
 
 
 ORACLE_P_ADJUST_BY = """
@@ -2133,13 +2123,13 @@ def q_p_adjust_holm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M10 Holm step-down FWER adjustment, HASH-GATED (r10) — the
     third method of the ``adjust`` argument surface (see
     ``q_p_adjust_by``).  Same tie-heavy deterministic p-set through
-    ``stats.bh.holm_adjust``; the oracle replays R's
+    ``stats.bh.p_adjust(method="holm")``; the oracle replays R's
     ``pmin(1, cummax((n - i + 1) * p[o]))`` as a forward-cummax
     window, proving the step-DOWN direction (the mirror of BH/BY's
     step-up reverse cummin) end-to-end."""
-    from transcriptomics_data_integration_spark.stats.bh import holm_adjust
+    from transcriptomics_data_integration_spark.stats.bh import p_adjust
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     ps = orders.where((F.col("o_orderkey") % 4) == 1).select(
         F.col("o_orderkey").alias("id"),
         (
@@ -2147,7 +2137,7 @@ def q_p_adjust_holm(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(4095.0)
         ).alias("p_value"),
     )
-    return holm_adjust(ps, "p_value", "adj_holm", tiebreak_col="id")
+    return p_adjust(ps, "p_value", "adj_holm", method="holm", tiebreak_col="id")
 
 
 ORACLE_P_ADJUST_HOLM = """
